@@ -7,7 +7,9 @@ kernel genuinely isn't expressible (none below needs one):
 
 - exact dedup: sha256 groupBy, keep min-id representative;
 - MinHash + LSH near-dup: char-shingles → k independent min-hashes →
-  band buckets → candidate pairs via bucket self-join (never all-pairs);
+  band buckets → candidate pairs or star edges from each bucket's sorted
+  member list (``_bucket_pairs``, shared with the embedding near-dup
+  operators; never all-pairs);
 - SimHash near-dup: 64-bit sign-sketch over token hashes, Hamming-banded;
 - n-gram Jaccard verification: exact Jaccard on shingle sets for LSH
   candidates (the verify step after the LSH recall step);
@@ -15,8 +17,10 @@ kernel genuinely isn't expressible (none below needs one):
 
 Scale notes: every join here is an equi join on a hash bucket; skew on
 giant buckets (boilerplate docs) is bounded by ``max_bucket`` — oversized
-buckets are dropped with a logged count (silent truncation is worse than a
-knob). Shuffles: one per groupBy + the bucket self-join.
+LSH buckets are dropped before their member list materializes (winnowing
+logs a count of the fingerprint buckets it drops). Shuffles in the LSH
+step: one on (band, bucket) for the size window and the member
+aggregation, one for the final distinct.
 """
 
 from __future__ import annotations
@@ -140,8 +144,8 @@ def _spread_small_scan(df: DataFrame) -> DataFrame:
         return df
     if not files or len(files) > 8:
         return df
-    sc = df.sparkSession.sparkContext
     try:
+        sc = df.sparkSession.sparkContext  # raises under Spark Connect
         jvm = sc._jvm
         hconf = sc._jsc.hadoopConfiguration()
         total = 0
@@ -163,6 +167,62 @@ def minhash_signature(df: DataFrame, content_col: str = "text",
     )
 
 
+def _band_buckets(sig: DataFrame, id_col: str, sig_col: str, bands: int,
+                  rows: int, key) -> DataFrame:
+    """Band a signature array into ``(id, band, bucket)`` rows: band b is
+    the ``rows`` values from position b*rows, and ``key`` (array column ->
+    column) turns them into the bucket key."""
+    return sig.select(
+        F.col(id_col),
+        F.posexplode(F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda b: key(F.slice(F.col(sig_col), b * rows + 1, rows)),
+        )).alias("band", "bucket"),
+    )
+
+
+def _bucket_pairs(banded: DataFrame, id_col: str, max_bucket: int,
+                  emit: str = "pairs") -> DataFrame:
+    """The bucket-local pair step every LSH-style operator shares.
+
+    ``banded`` holds ``(id_col, band, bucket)`` rows. ONE aggregation per
+    (band, bucket) collects the members as a sorted, de-duplicated list
+    (never a bucket self-join), bounded to 2..``max_bucket`` rows — a
+    10^6-doc boilerplate bucket would mean 10^12 intra-bucket pairs.
+    ``emit='pairs'`` gives DataFrame[a, b] with a < b; ``emit='star'``
+    gives DataFrame[src, dst], every member linked to the bucket's min id
+    (same connected components as the clique, O(n) edges per bucket).
+    A repeated id collapses in the member set, so no a == b row appears.
+    """
+    # size-filter BEFORE the list materializes: the windowed count spills
+    # oversized (band, bucket) groups to disk, so a degenerate 10^7-doc
+    # boilerplate bucket never builds a giant aggregation buffer only to
+    # be dropped; the groupBy reuses the window's exchange (same keys)
+    _wb = Window.partitionBy("band", "bucket")
+    members = (
+        banded.withColumn("_bsz", F.count("*").over(_wb))
+        .where((F.col("_bsz") >= 2) & (F.col("_bsz") <= max_bucket))
+        .groupBy("band", "bucket")
+        .agg(F.array_sort(F.collect_set(F.col(id_col))).alias("_ids"))
+    )
+    if emit == "star":
+        edges = members.select(F.col("_ids")[0].alias("src"), F.explode(
+            F.slice("_ids", 2, F.size("_ids"))).alias("dst"))
+    else:
+        # sorted members + position slicing emit each a<b pair exactly
+        # once — half the rows of the naive double explode
+        edges = (
+            members.select(F.posexplode("_ids").alias("_pos", "a"), "_ids")
+            .select("a", F.explode(
+                F.slice("_ids", F.col("_pos") + 2, F.size("_ids"))).alias("b"))
+        )
+    return edges.distinct()
+
+
+def _xxhash_key(band: F.Column) -> F.Column:
+    return F.xxhash64(band.cast("string"))
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -176,53 +236,15 @@ def lsh_candidate_pairs(
 
     bands × rows layout (rows = num_hashes/bands); docs agreeing on ALL
     rows of any band share a bucket. Pairs are generated per (band, bucket)
-    group — the shuffle key is the bucket hash, never a global cross join.
-
-    Round-6 shape: ONE aggregation per (band, bucket) collects the member
-    list, bounds it (buckets above ``max_bucket`` dropped — a 10^6-doc
-    boilerplate bucket would mean 10^12 intra-bucket pairs), and a double
-    explode emits the a<b member pairs. The former bucket-size join +
-    bucket self-join evaluated the signature subtree three times (the
-    expensive MinHash UDF ran per branch) and shuffled ``banded`` twice;
-    this computes signatures once and shuffles one band table.
+    group by ``_bucket_pairs`` — the shuffle key is the bucket hash, never
+    a global cross join; buckets above ``max_bucket`` docs are dropped.
+    Signatures compute once and one band table is shuffled.
     """
-    rows = num_hashes // bands
     sig = minhash_signature(df.select(id_col, content_col), content_col,
                             num_hashes, shingle)
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.slice(F.col("minhash"), b * rows + 1, rows).cast("string")
-                    ).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-    # size-filter BEFORE the list materializes: the windowed count spills
-    # oversized (band, bucket) groups to disk, so a degenerate 10^7-doc
-    # boilerplate bucket never builds a giant aggregation buffer only to
-    # be dropped; the groupBy reuses the window's exchange (same keys)
-    _wb = Window.partitionBy("band", "bucket")
-    members = (
-        banded.withColumn("_bsz", F.count("*").over(_wb))
-        .where((F.col("_bsz") >= 2) & (F.col("_bsz") <= max_bucket))
-        .groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("_ids"))
-    )
-    # sorted members + position slicing emit each a<b pair exactly once —
-    # half the rows of the naive double explode, no value filter (r6)
-    return (
-        members.select(F.posexplode("_ids").alias("_pos", "a"), "_ids")
-        .select("a", F.explode(
-            F.slice("_ids", F.col("_pos") + 2, F.size("_ids"))).alias("b"))
-        .distinct()
-    )
+    banded = _band_buckets(sig, id_col, "minhash", bands,
+                           num_hashes // bands, _xxhash_key)
+    return _bucket_pairs(banded, id_col, max_bucket)
 
 
 def lsh_candidate_pairs_portable(
@@ -236,12 +258,12 @@ def lsh_candidate_pairs_portable(
     """MinHash-LSH candidate pairs over the ENGINE-PORTABLE signature
     family (``minhash_portable_udf``: mod-p polynomial char-gram hash +
     8 LCG permutations, every intermediate < 2^62) — same banded
-    bucket-equi-join shape as the production ``lsh_candidate_pairs``, but
+    bucket-pairs step as the production ``lsh_candidate_pairs``, but
     every number is reproducible in ANSI SQL, so the whole band join is
     hard-oracle-able (DuckDB: list_transform/list_reduce signatures →
     string band keys → self-join). Bucket key is the ':'-joined row
-    values of the band (a plain string equi-join key; the production
-    variant xxhash64-compresses it, which is an engine-specific detail).
+    values of the band (a plain string key; the production variant
+    xxhash64-compresses it, which is an engine-specific detail).
 
     ``bands`` must divide 8 (the portable family size). Same
     ``max_bucket`` bound as production: buckets holding more than this
@@ -249,47 +271,13 @@ def lsh_candidate_pairs_portable(
     10^12 intra-bucket pairs)."""
     if 8 % bands != 0:
         raise ValueError(f"bands={bands} must divide the 8-hash portable family")
-    rows = 8 // bands
     sig = _spread_small_scan(df).select(
         F.col(id_col),
         minhash_portable_udf(shingle=shingle)(F.lower(F.col(content_col))).alias("s"),
     )
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.concat_ws(
-                        ":", F.slice(F.col("s"), b * rows + 1, rows)
-                        .cast("array<string>")
-                    ).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    # same single-aggregation pair generation as lsh_candidate_pairs
-    # (round-6): signatures compute once, buckets bound in the aggregate
-    # size-filter BEFORE the list materializes: the windowed count spills
-    # oversized (band, bucket) groups to disk, so a degenerate 10^7-doc
-    # boilerplate bucket never builds a giant aggregation buffer only to
-    # be dropped; the groupBy reuses the window's exchange (same keys)
-    _wb = Window.partitionBy("band", "bucket")
-    members = (
-        banded.withColumn("_bsz", F.count("*").over(_wb))
-        .where((F.col("_bsz") >= 2) & (F.col("_bsz") <= max_bucket))
-        .groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("_ids"))
-    )
-    # sorted members + position slicing emit each a<b pair exactly once —
-    # half the rows of the naive double explode, no value filter (r6)
-    return (
-        members.select(F.posexplode("_ids").alias("_pos", "a"), "_ids")
-        .select("a", F.explode(
-            F.slice("_ids", F.col("_pos") + 2, F.size("_ids"))).alias("b"))
-        .distinct()
-    )
+    banded = _band_buckets(sig, id_col, "s", bands, 8 // bands,
+                           lambda v: F.concat_ws(":", v.cast("array<string>")))
+    return _bucket_pairs(banded, id_col, max_bucket)
 
 
 def lsh_bucket_star_edges(
@@ -310,42 +298,11 @@ def lsh_bucket_star_edges(
     ``lsh_candidate_pairs`` when per-pair verification (Jaccard) is the
     goal; use this when transitive clustering is.
     """
-    rows = num_hashes // bands
     sig = minhash_signature(df.select(id_col, content_col), content_col,
                             num_hashes, shingle)
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.slice(F.col("minhash"), b * rows + 1, rows).cast("string")
-                    ).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    # round-6: one aggregation collects each bucket's members (the former
-    # size-filter join re-evaluated the MinHash signature subtree twice);
-    # the star explodes from the collected list, min member as root
-    # same spillable-window size filter as lsh_candidate_pairs: oversized
-    # buckets are dropped before any member list materializes
-    _wb = Window.partitionBy("band", "bucket")
-    members = (
-        banded.withColumn("_bsz", F.count("*").over(_wb))
-        .where((F.col("_bsz") >= 2) & (F.col("_bsz") <= max_bucket))
-        .groupBy("band", "bucket")
-        .agg(F.collect_list(F.col(id_col)).alias("_ids"))
-        .select(F.array_min("_ids").alias("_root"), "_ids")
-    )
-    return (
-        members.select("_root", F.explode("_ids").alias("dst"))
-        .where(F.col("dst") != F.col("_root"))
-        .select(F.col("_root").alias("src"), "dst")
-        .distinct()
-    )
+    banded = _band_buckets(sig, id_col, "minhash", bands,
+                           num_hashes // bands, _xxhash_key)
+    return _bucket_pairs(banded, id_col, max_bucket, emit="star")
 
 
 def ngram_jaccard_pairs(df: DataFrame, cand: DataFrame, id_col: str = "doc_id",
@@ -1023,29 +980,19 @@ def simhash64_udf(seed: int = 11):
     return _sh
 
 
-def simhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
-                            content_col: str = "text",
-                            max_hamming: int = 3) -> DataFrame:
-    """SimHash near-dup pairs: band the 64-bit sketch into 4×16-bit chunks;
-    by pigeonhole, any pair within Hamming distance 3 shares ≥1 exact
-    chunk → equi-join per chunk, then exact Hamming filter via bit_count."""
-    sk = _spread_small_scan(df).select(
-        F.col(id_col), simhash64_udf()(F.col(content_col)).alias("_sk"))
+def _simhash_band_pairs(sk: DataFrame, id_col: str,
+                        max_hamming: int) -> DataFrame:
+    """Pairs of ``_sk`` sketches within ``max_hamming`` bits: band each
+    sketch into 4×16-bit chunks (a 62-bit sketch's top chunk has 14),
+    equi-join per chunk, exact Hamming filter via bit_count. By
+    pigeonhole, any pair within Hamming distance 3 shares ≥1 exact chunk."""
     banded = sk.select(
         id_col, "_sk",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk"),
-                        F.shiftright(F.col("_sk"), i * 16)
-                        .bitwiseAND(F.lit(0xFFFF)).alias("val"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select(id_col, "_sk", F.col("c.chunk").alias("chunk"), F.col("c.val").alias("val"))
+        F.posexplode(F.array(*[
+            F.shiftright(F.col("_sk"), i * 16).bitwiseAND(F.lit(0xFFFF))
+            for i in range(4)
+        ])).alias("chunk", "val"),
+    )
     left = banded.select("chunk", "val", F.col(id_col).alias("a"), F.col("_sk").alias("_ska"))
     right = banded.select("chunk", "val", F.col(id_col).alias("b"), F.col("_sk").alias("_skb"))
     hamming = F.bit_count(F.col("_ska").bitwiseXOR(F.col("_skb")))
@@ -1057,6 +1004,17 @@ def simhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
         .select("a", "b", "hamming")
         .distinct()
     )
+
+
+def simhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
+                            content_col: str = "text",
+                            max_hamming: int = 3) -> DataFrame:
+    """SimHash near-dup pairs: band the 64-bit sketch into 4×16-bit chunks;
+    by pigeonhole, any pair within Hamming distance 3 shares ≥1 exact
+    chunk → equi-join per chunk, then exact Hamming filter via bit_count."""
+    sk = _spread_small_scan(df).select(
+        F.col(id_col), simhash64_udf()(F.col(content_col)).alias("_sk"))
+    return _simhash_band_pairs(sk, id_col, max_hamming)
 
 
 def simhash62_portable_udf(p: int = PORTABLE_P):
@@ -1118,28 +1076,5 @@ def simhash_candidate_pairs_portable(df: DataFrame, id_col: str = "doc_id",
     sketching, bounded chunk equi-join, no all-pairs anywhere."""
     sk = _spread_small_scan(df).select(
         F.col(id_col), simhash62_portable_udf()(F.col(content_col)).alias("_sk"))
-    sk = sk.where(F.col("_sk").isNotNull())
-    banded = sk.select(
-        id_col, "_sk",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(i).alias("chunk"),
-                F.shiftright(F.col("_sk"), i * 16)
-                .bitwiseAND(F.lit(0xFFFF)).alias("val"),
-            ) for i in range(4)
-        ])).alias("c"),
-    ).select(id_col, "_sk", F.col("c.chunk").alias("chunk"),
-             F.col("c.val").alias("val"))
-    left = banded.select("chunk", "val", F.col(id_col).alias("a"),
-                         F.col("_sk").alias("_ska"))
-    right = banded.select("chunk", "val", F.col(id_col).alias("b"),
-                          F.col("_sk").alias("_skb"))
-    hamming = F.bit_count(F.col("_ska").bitwiseXOR(F.col("_skb")))
-    return (
-        left.join(right, ["chunk", "val"])
-        .where(F.col("a") < F.col("b"))
-        .withColumn("hamming", hamming)
-        .where(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
-        .distinct()
-    )
+    return _simhash_band_pairs(sk.where(F.col("_sk").isNotNull()), id_col,
+                               max_hamming)

@@ -24,11 +24,24 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fuzzylink_spark.operators.dedup import _bucket_pairs
+
 
 def l2_normalize_col(col) -> F.Column:
     c = F.col(col) if isinstance(col, str) else col
     norm = F.sqrt(F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x))
     return F.when(norm > 0, F.transform(c, lambda x: x / norm)).otherwise(c)
+
+
+def _fold_dot(u, v) -> F.Column:
+    """Left-fold dot product into a float64 accumulator:
+    aggregate(zip_with(u,v,*), 0.0, +). The fold order is the array
+    order, exactly DuckDB's list_reduce((acc,x) -> acc+x) — identical
+    IEEE rounding sequence, bit-identical result."""
+    return F.aggregate(
+        F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
 
 
 def _gemm_topk_udf(queries: np.ndarray, qids: np.ndarray, k: int,
@@ -145,29 +158,6 @@ def _with_buckets(df: DataFrame, vec_col: str, tables: int, planes: int,
     return df.withColumn("_bucket", F.explode(udf(F.col(vec_col))))
 
 
-def signed_projection_bucket(vec_col: str, planes: int = 8, seed: int = 99) -> F.Column:
-    """LSH bucket id: sign of ``planes`` pseudo-random hyperplane
-    projections, packed into an int. Hyperplane j weight for dim i is a
-    deterministic ±1 from xxhash64(i, j, seed) — computed in Catalyst, so
-    bucketing is a pure column expression (scan-time, no Python)."""
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bucket = F.lit(0)
-    for j in range(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                c,
-                F.sequence(F.lit(0), F.size(c) - 1),
-                lambda x, i: F.when(
-                    F.pmod(F.xxhash64(i, F.lit(j), F.lit(seed)), F.lit(2)) == 0, x
-                ).otherwise(-x),
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return bucket
-
-
 def train_ivf_centroids(
     corpus: DataFrame,
     n_centroids: int = 64,
@@ -250,11 +240,7 @@ def ivf_topk(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec"), "_cell"
     )
     joined = cb.join(F.broadcast(qside), "_cell")
-    dot = F.aggregate(
-        F.zip_with(F.col(vec_col), F.col("_qvec"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
+    dot = _fold_dot(F.col(vec_col), F.col("_qvec"))
     scored = joined.select(
         "query_id", F.col(id_col).alias("vec_id"), dot.alias("score")
     )
@@ -297,11 +283,7 @@ def lsh_bucketed_topk(
     joined = cb.join(F.broadcast(qside), "_bucket").dropDuplicates(
         ["query_id", id_col]
     )
-    dot = F.aggregate(
-        F.zip_with(F.col(vec_col), F.col("_qvec"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
+    dot = _fold_dot(F.col(vec_col), F.col("_qvec"))
     scored = joined.select(
         "query_id", F.col(id_col).alias("vec_id"), dot.alias("score")
     )
@@ -322,33 +304,22 @@ def embedding_near_dup_pairs(
     seed: int = 99,
     max_bucket: int = 100_000,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via banded multi-table LSH
-    self-join: DataFrame[a, b, score] with cosine >= threshold.
+    """Embedding-cosine near-duplicate pairs via banded multi-table
+    sign-LSH: DataFrame[a, b, score] with cosine >= threshold.
 
     Candidates collide in ANY of the ``tables`` tables (recall
-    1-(1-p^planes)^tables, ~0.95 at cosine 0.95 with the defaults), are
-    deduped across tables, then exact-verified with one dot product per
-    pair (two hash joins against the vector table). Oversized buckets
-    (degenerate directions) are dropped, bounded by ``max_bucket``."""
-    b = _with_buckets(vectors.select(id_col, vec_col), vec_col, tables,
-                      planes, seed)
-    sizes = b.groupBy("_bucket").agg(F.count("*").alias("_n"))
-    b = b.join(sizes.where(F.col("_n") <= max_bucket), "_bucket")
-    left = b.select("_bucket", F.col(id_col).alias("a"))
-    right = b.select("_bucket", F.col(id_col).alias("b"))
-    cand = (
-        left.join(right, "_bucket")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    1-(1-p^planes)^tables, ~0.95 at cosine 0.95 with the defaults). The
+    bucketing UDF runs once; the shared ``_bucket_pairs`` step turns each
+    bucket's member list into a<b pairs (deduped across tables), dropping
+    buckets above ``max_bucket`` rows (degenerate directions). Each pair
+    is exact-verified with one dot product against the vector table."""
+    udf = lsh_table_buckets_udf(tables, planes, seed)
+    banded = vectors.select(F.col(id_col), F.posexplode(udf(F.col(vec_col)))
+                            .alias("band", "bucket"))
+    cand = _bucket_pairs(banded, id_col, max_bucket)
     va = vectors.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"))
     vb = vectors.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("_va"), F.col("_vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
+    dot = _fold_dot(F.col("_va"), F.col("_vb"))
     return (
         cand.join(va, "a").join(vb, "b")
         .withColumn("score", dot)
@@ -362,9 +333,9 @@ def embedding_near_dup_pairs(
 # from a pure-int64 LCG formula instead of a seeded Gaussian RNG, and every
 # float operation (cast to float64, LEFT-FOLD sums, sqrt, divide) has one
 # IEEE-754-defined result — so ANY engine replays buckets, candidates, and
-# cosines BIT-IDENTICALLY. This moves the near-dup self-join from a
+# cosines BIT-IDENTICALLY. This moves the near-dup candidate step from a
 # rows-only check to an exact DuckDB value oracle (same role
-# minhash_portable_udf plays for MinHash, dedup.py:857). Recall of a ±1
+# minhash_portable_udf plays for MinHash). Recall of a ±1
 # (Rademacher) plane matches the Gaussian one in expectation — collision
 # probability is still 1 - theta/pi in the random-rotation sense — so the
 # production variant (`embedding_near_dup_pairs`) and this one differ only
@@ -382,17 +353,6 @@ def _portable_sign(t: int, p: int, d) -> F.Column:
     k = F.lit(t * 100003 + p * 211) + d
     lcg = (F.lit(PORTABLE_LCG_A) * k + F.lit(PORTABLE_LCG_C)) % F.lit(PORTABLE_LCG_P)
     return F.when(lcg % F.lit(2) == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-
-
-def _fold_dot(u, v) -> F.Column:
-    """Left-fold float64 dot product: aggregate(zip_with(u,v,*), 0.0, +).
-    The fold order is the array order, exactly DuckDB's
-    list_reduce((acc,x) -> acc+x) — identical IEEE rounding sequence,
-    bit-identical result."""
-    return F.aggregate(
-        F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def portable_table_buckets(vec_col, tables: int = 4, planes: int = 6) -> F.Column:
@@ -427,25 +387,17 @@ def embedding_near_dup_portable(
     max_bucket: int = 100_000,
 ) -> DataFrame:
     """Engine-portable twin of ``embedding_near_dup_pairs``: banded
-    sign-LSH self-join -> exact float64 cosine verify -> DataFrame[a, b,
-    score] with cosine >= threshold, every number reproducible bit-exactly
-    in ANSI SQL (the DuckDB board oracle replays LCG planes, left-fold
-    projections, bucket join, and cosine verbatim — the comparison is
-    exact, not tolerance-based). Same 100 TB plan shape as the production
-    variant: scan-local bucketing, bounded bucket equi-join (max_bucket
-    drops degenerate directions), two hash joins for the verify."""
-    b = vectors.select(id_col, vec_col).withColumn(
-        "_bucket", F.explode(portable_table_buckets(vec_col, tables, planes)))
-    sizes = b.groupBy("_bucket").agg(F.count("*").alias("_n"))
-    b = b.join(sizes.where(F.col("_n") <= max_bucket), "_bucket")
-    left = b.select("_bucket", F.col(id_col).alias("a"))
-    right = b.select("_bucket", F.col(id_col).alias("b"))
-    cand = (
-        left.join(right, "_bucket")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    sign-LSH -> shared ``_bucket_pairs`` step -> exact float64 cosine
+    verify -> DataFrame[a, b, score] with cosine >= threshold, every
+    number reproducible bit-exactly in ANSI SQL (the DuckDB board oracle
+    replays LCG planes, left-fold projections, bucket join, and cosine
+    verbatim — the comparison is exact, not tolerance-based). Same 100 TB
+    plan shape as the production variant: scan-local bucketing, one
+    bounded bucket aggregation (max_bucket drops degenerate directions),
+    then the verify against the vector table."""
+    banded = vectors.select(F.col(id_col), F.posexplode(
+        portable_table_buckets(vec_col, tables, planes)).alias("band", "bucket"))
+    cand = _bucket_pairs(banded, id_col, max_bucket)
     e64 = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     vv = vectors.select(F.col(id_col).alias("_id"), e64.alias("_e"))
     va = vv.select(F.col("_id").alias("a"), F.col("_e").alias("_va"))
