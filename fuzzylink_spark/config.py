@@ -57,9 +57,6 @@ class LinkConfig:
     # low-cardinality (e.g. lang), broadcast without the probe job;
     # False = known high-cardinality, shuffle semi join without probing
     blocks_are_small: bool | None = None
-    shuffle_partitions: int = 32
-    block_pair_budget: int = 50_000_000   # max |uA|x|uB| pairs per block before salting warning
-    salt_buckets: int = 8                 # fixed sub-splits (candidate_pairs path)
     # pair budget per GEMM cell (adaptive 2-D tiling). 1M pairs/tile ~=
     # tens of MB working set and ~5 s of kernel compute: large enough to
     # amortize the per-tile Arrow/Python hand-off (measured 45 s -> 34 s

@@ -3,10 +3,15 @@
 The numpy 2-D kernel in ``strdist`` is memory-bandwidth-bound at ~0.25 M
 pairs/s/core; the same greedy bit-parallel algorithm in C runs the whole
 matching loop in registers (~10x). This module compiles the C source
-once per machine into a content-addressed shared object under the user
-cache dir (atomic rename, so concurrent Spark Python workers race
-safely) and exposes ``jw_cross_native``; import failures or a missing
-compiler degrade to ``None`` and the caller keeps the numpy path.
+once per machine into a content-addressed shared object under a
+per-user cache dir (atomic rename, so concurrent Spark Python workers race
+safely) and exposes ``jw_cross_native``. The cache dir
+(``FUZZYLINK_NATIVE_CACHE``, default ``<tmpdir>/fuzzylink_native-<uid>``,
+created 0700) is refused unless the current user owns it and no one else
+can write to it: another user could otherwise plant the shared object
+that ``ctypes`` loads. A refused dir, a missing compiler or any other
+build failure degrades to ``None`` (logged once at WARN) and the caller
+keeps the numpy path.
 
 Bit-identity contract (pinned by tests/test_round6.py): every float64
 expression is written in exactly the order the numpy kernel evaluates it
@@ -19,6 +24,7 @@ from __future__ import annotations
 
 import ctypes
 import hashlib
+import logging
 import os
 import subprocess
 import tempfile
@@ -144,11 +150,26 @@ void jw_cross(const int32_t *xcodes, const int32_t *xlens, int nx, int sx,
 """
 
 
+def _cache_dir() -> str:
+    """The native-kernel cache dir, created 0700 if missing; raises
+    PermissionError unless it is owned by this user and not group- or
+    world-writable."""
+    uid = os.getuid()
+    cache_dir = os.environ.get("FUZZYLINK_NATIVE_CACHE") or os.path.join(
+        tempfile.gettempdir(), f"fuzzylink_native-{uid}")
+    os.makedirs(cache_dir, mode=0o700, exist_ok=True)
+    st = os.stat(cache_dir)
+    if st.st_uid != uid or st.st_mode & 0o022:
+        raise PermissionError(
+            f"native kernel cache {cache_dir} (owner uid {st.st_uid}, mode "
+            f"{st.st_mode & 0o777:o}) must be owned by uid {uid} and not "
+            "group- or world-writable")
+    return cache_dir
+
+
 def _build():
     h = hashlib.sha256(_SRC.encode()).hexdigest()[:16]
-    cache_dir = os.environ.get("FUZZYLINK_NATIVE_CACHE") or os.path.join(
-        tempfile.gettempdir(), "fuzzylink_native")
-    os.makedirs(cache_dir, exist_ok=True)
+    cache_dir = _cache_dir()
     so = os.path.join(cache_dir, f"jw_{h}.so")
     if not os.path.exists(so):
         src = os.path.join(cache_dir, f"jw_{h}.c")
@@ -175,15 +196,19 @@ _TRIED = False
 
 
 def jw_cross_native():
-    """The compiled kernel, or None when no working C compiler exists
-    (callers keep the numpy path). Lazy: first call compiles/loads."""
+    """The compiled kernel, or None when it cannot be built or loaded
+    safely (callers keep the numpy path). Lazy: first call compiles/loads;
+    a failure is logged once per process."""
     global _FN, _TRIED
     if not _TRIED:
         _TRIED = True
         try:
             _FN = _build()
-        except Exception:  # noqa: BLE001 — no compiler/cache: numpy fallback
+        except Exception as exc:  # noqa: BLE001 — no compiler/cache: numpy fallback
             _FN = None
+            logging.getLogger(__name__).warning(
+                "native Jaro-Winkler kernel unavailable, using the numpy "
+                "kernel: %s", exc)
     return _FN
 
 

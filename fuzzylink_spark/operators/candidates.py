@@ -1,21 +1,14 @@
-"""Candidate-pair generation (operator J2) with explicit skew handling.
+"""Candidate-pair inputs (operator J2): distinct keys per block.
 
 Reference semantics: per block, every *unique* A-string crosses every
 unique B-string and gets a cosine score (the per-block dense matrix loop at
 R/fuzzylink.R:113-155, melted to long form at :165-172). Relationally that
-is a within-block cross join of the two distinct-key sets — in Spark an
-equi join on ``block_key`` whose output is the within-block cartesian set.
-
-Scale design (north_rule: 10^12 rows, skewed blocks):
-- distinct keys per side BEFORE pairing (the reference also dedups first,
-  R/fuzzylink.R:150-151) — pairs are generated over unique strings, never
-  raw rows;
-- hot blocks are SALTED: the A side gets ``salt = pmod(xxhash64(key), k)``
-  and the B side is replicated k ways via an exploded literal array, so one
-  giant block becomes k independent join cells — semantics-preserving
-  because scoring is per-pair;
-- AQE skew-join stays on as the runtime backstop; salting handles the
-  predictable skew (e.g. lang='en' dominating), AQE the residual.
+is a within-block cross join of the two distinct-key sets. The pairs
+themselves are generated inside the skew-proof 2-D GEMM tiles of
+``features.cogrouped_pair_features``; this module builds the distinct
+(block_key, key) sides they cross — pairs are generated over unique
+strings, never raw rows (the reference also dedups first,
+R/fuzzylink.R:150-151) — and the per-block pair counts.
 """
 
 from __future__ import annotations
@@ -30,62 +23,6 @@ def unique_keys_per_block(df: DataFrame, by: str) -> DataFrame:
         df.select("block_key", F.col(by).alias("key"))
         .where(F.col("key").isNotNull())
         .distinct()
-    )
-
-
-def candidate_pairs(
-    uA: DataFrame,
-    uB: DataFrame,
-    salt_buckets: int = 8,
-    salted_blocks: DataFrame | None = None,
-) -> DataFrame:
-    """J2: within-block candidate pairs ``(A, B, block_key)``.
-
-    ``uA``/``uB`` are distinct (block_key, key) sets. If ``salted_blocks``
-    (a DataFrame[block_key] of known-hot blocks) is given, those blocks are
-    joined through the salted path and unioned with the plain equi join of
-    the rest; otherwise everything takes the plain path and AQE handles
-    skew at runtime.
-    """
-    a = uA.select("block_key", F.col("key").alias("A"))
-    b = uB.select("block_key", F.col("key").alias("B"))
-
-    if salted_blocks is None or salt_buckets <= 1:
-        return a.join(b, on="block_key", how="inner")
-
-    hot = F.broadcast(salted_blocks.select("block_key").distinct())
-
-    a_hot = a.join(hot, "block_key", "left_semi").withColumn(
-        "salt", F.pmod(F.xxhash64(F.col("A")), F.lit(salt_buckets))
-    )
-    b_hot = (
-        b.join(hot, "block_key", "left_semi")
-        .withColumn(
-            "salt",
-            F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)])),
-        )
-    )
-    hot_pairs = a_hot.join(b_hot, on=["block_key", "salt"], how="inner").drop("salt")
-
-    a_cold = a.join(hot, "block_key", "left_anti")
-    b_cold = b.join(hot, "block_key", "left_anti")
-    cold_pairs = a_cold.join(b_cold, on="block_key", how="inner")
-
-    return cold_pairs.unionByName(hot_pairs)
-
-
-def find_hot_blocks(uA: DataFrame, uB: DataFrame, threshold: int) -> DataFrame:
-    """Blocks whose |uA|x|uB| pair count would exceed ``threshold``.
-
-    Two cheap per-side counts + a join of two tiny aggregates; used to
-    decide the salted path before generating any pairs.
-    """
-    ca = uA.groupBy("block_key").agg(F.count("*").alias("n_a"))
-    cb = uB.groupBy("block_key").agg(F.count("*").alias("n_b"))
-    return (
-        ca.join(cb, "block_key")
-        .where(F.col("n_a") * F.col("n_b") > threshold)
-        .select("block_key")
     )
 
 

@@ -1,61 +1,23 @@
-"""Pair featurization: cosine similarity + lexical distances in one pass.
+"""Pair featurization: cosine similarity + Jaro-Winkler, born inside tiles.
 
 Replaces the reference's per-block dense GEMM + melt
-(R/fuzzylink.R:113-172) and the stringdist feature mutate
-(R/fuzzylink.R:174-186). The Spark formulation never materializes a
-matrix: candidate pairs join their embeddings (two hash joins on the
-distinct-key embedding table) and a single Arrow batch pass computes the
-NumPy dot products; JW (and optionally the full RF feature set) runs in the
-same candidate partition.
+(R/fuzzylink.R:113-172) and its JW feature mutate (R/fuzzylink.R:174-186).
+``block_salt_plan`` cuts each block's pair matrix into a ka x kb grid; the
+distinct-key sides are salted onto it and cogrouped per tile, where one
+Arrow kernel (``_tile_kernel``) computes the features once and an emitter
+picks what leaves the tile: every pair, the accepted pairs (+ an
+uncertainty band), or the (sim, jw) histogram.
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fuzzylink_spark.functions.strdist import jaro_winkler_cross, jaro_winkler_udf, pair_features_udf, soundex_neq_col
-from fuzzylink_spark.functions.vectors import cosine_pairs_udf
-
-
-def attach_embeddings(pairs: DataFrame, emb: DataFrame) -> DataFrame:
-    """Join the distinct-key embedding table onto both sides of the pair
-    table. ``emb`` is DataFrame[key, embedding]; it is usually much smaller
-    than the pair table (distinct strings only) — broadcast when it fits,
-    else two shuffle hash joins on the key."""
-    ea = emb.select(F.col("key").alias("A"), F.col("embedding").alias("_emb_a"))
-    eb = emb.select(F.col("key").alias("B"), F.col("embedding").alias("_emb_b"))
-    return pairs.join(ea, "A").join(eb, "B")
-
-
-def score_pairs(pairs_with_emb: DataFrame, full_features: bool = False) -> DataFrame:
-    """Compute ``sim`` (cosine, F10) and ``jw`` (F2) — plus the full
-    RF feature set (F3-F8) when ``full_features`` — and drop the vectors.
-
-    Output: pair table (A, B, block_key, sim, jw[, osa, cosine_qgram,
-    jaccard_qgram, lcs, qgram, soundex_neq]) — the reference's central IR
-    (R/fuzzylink.R:165-186).
-    """
-    df = pairs_with_emb.withColumn(
-        "sim", cosine_pairs_udf(F.col("_emb_a"), F.col("_emb_b"))
-    )
-    if full_features:
-        df = df.withColumn("_feat", pair_features_udf(F.col("A"), F.col("B")))
-        df = (
-            df.withColumn("jw", F.col("_feat.jw"))
-            .withColumn("osa", F.col("_feat.osa"))
-            .withColumn("cosine_qgram", F.col("_feat.cosine_qgram"))
-            .withColumn("jaccard_qgram", F.col("_feat.jaccard_qgram"))
-            .withColumn("lcs", F.col("_feat.lcs"))
-            .withColumn("qgram", F.col("_feat.qgram"))
-            .withColumn("soundex_neq", soundex_neq_col("A", "B"))
-            .drop("_feat")
-        )
-    else:
-        df = df.withColumn("jw", jaro_winkler_udf(F.col("A"), F.col("B")))
-    return df.drop("_emb_a", "_emb_b")
+from fuzzylink_spark.functions.strdist import jaro_winkler_cross
 
 
 # ---------------------------------------------------------------------------
@@ -78,84 +40,75 @@ def score_pairs(pairs_with_emb: DataFrame, full_features: bool = False) -> DataF
 
 PAIR_IR_SCHEMA = ("block_id int, a_id long, b_id long, "
                   "sim float, jw float, exact boolean")
+ACCEPT_IR_SCHEMA = PAIR_IR_SCHEMA + ", match_probability double"
+BAND_IR_SCHEMA = ACCEPT_IR_SCHEMA + ", accepted boolean"
+HIST_SCHEMA = "bx int, by int, n long"
 
-_EMPTY_MELT = pd.DataFrame(
-    {"block_id": pd.Series([], dtype="int32"),
-     "a_id": pd.Series([], dtype="int64"),
-     "b_id": pd.Series([], dtype="int64"),
-     "sim": pd.Series([], dtype="float32"),
-     "jw": pd.Series([], dtype="float32"),
-     "exact": pd.Series([], dtype="bool")}
-)
+# upper bound on a block's tile count in the salt plan
+_MAX_CELLS = 4096
 
 
-def _tile_features(a_pdf: pd.DataFrame, b_pdf: pd.DataFrame, encoder):
-    """Shared tile math: (sims, jw, exact) flat arrays for the na x nb
-    cross product of one GEMM cell."""
-    a_keys = a_pdf["key"].tolist()
-    b_keys = b_pdf["key"].tolist()
-    if encoder is not None:
-        A = encoder(a_keys)
-        B = encoder(b_keys)
-    else:
-        A = np.asarray(a_pdf["embedding"].tolist(), dtype=np.float32)
-        B = np.asarray(b_pdf["embedding"].tolist(), dtype=np.float32)
-    sims = (A @ B.T).ravel()  # float32: the GEMM's native precision
-    na, nb = len(a_pdf), len(b_pdf)
-    a_low = [k.lower() for k in a_keys]
-    b_low = [k.lower() for k in b_keys]
-    jw = jaro_winkler_cross(a_low, b_low).ravel().astype(np.float32)
-    exact = np.repeat(a_pdf["ci"].to_numpy(np.int64), nb) == np.tile(
-        b_pdf["ci"].to_numpy(np.int64), na
-    )
-    return sims, jw, exact, na, nb
+def _tile_kernel(encoder, emit):
+    """The one cogroup kernel (``applyInArrow``) behind every tile output.
+    ``encoder`` (list[str] -> unit-norm float32 matrix) embeds the keys in
+    place, so the shuffle never moves a vector. Per tile it runs the GEMM,
+    batched JW and the exact flag once, then ``emit(cols, na, nb)`` maps
+    the row-major flat pair arrays {block_id, a_id, b_id, sim, jw, exact}
+    to the columns that leave the tile (zero-copy into the ``pa.Table``).
+    A group with an empty side (one-sided block) emits from zero-length
+    arrays."""
+    import pyarrow as pa
+
+    def _kernel(key, a_tbl: "pa.Table", b_tbl: "pa.Table") -> "pa.Table":
+        na, nb = a_tbl.num_rows, b_tbl.num_rows
+        if na and nb:
+            a_keys = a_tbl.column("key").to_pylist()
+            b_keys = b_tbl.column("key").to_pylist()
+            sim = (encoder(a_keys) @ encoder(b_keys).T).ravel()  # f32 GEMM
+            jw = jaro_winkler_cross(
+                [k.lower() for k in a_keys], [k.lower() for k in b_keys]
+            ).ravel().astype(np.float32)
+        else:
+            sim = jw = np.empty(0, dtype=np.float32)
+        a_ci = a_tbl.column("ci").to_numpy(zero_copy_only=False)
+        b_ci = b_tbl.column("ci").to_numpy(zero_copy_only=False)
+        cols = {
+            "block_id": np.full(na * nb, key[0].as_py(), dtype=np.int32),
+            "a_id": np.repeat(
+                a_tbl.column("id").to_numpy(zero_copy_only=False), nb),
+            "b_id": np.tile(
+                b_tbl.column("id").to_numpy(zero_copy_only=False), na),
+            "sim": sim,
+            "jw": jw,
+            "exact": np.repeat(a_ci, nb) == np.tile(b_ci, na),
+        }
+        return pa.table(emit(cols, na, nb))
+
+    return _kernel
 
 
-def _gemm_melt_factory(encoder=None, accept=None, band=None):
-    """Build the per-cell kernel. With ``encoder`` (list[str] -> unit-norm
-    np.ndarray), cells carry only key strings and embeddings are computed
-    in place — the shuffle never moves a vector. Without it, cells carry
-    an ``embedding`` column (external/pretrained embeddings path).
+def _emit_melt(cols, na, nb):
+    """Every pair of the tile: the reference's melted dense matrix."""
+    return cols
 
-    ``accept`` = (posterior_fn, cutoff): score pairs IN the tile with the
-    broadcast calibrator and emit ONLY exact matches and pairs above the
-    cutoff (plus match_probability). This is the second pass of the
-    two-pass plan: at 10^12 candidate pairs the full pair table is tens
-    of TB — the accepted set is the only thing worth materializing.
 
-    ``band`` = (delta, cap): ALSO emit up to ``cap`` non-accepted pairs
-    per tile with posterior within ±delta of the cutoff (closest first,
-    deterministic index tiebreak), flagged ``accepted=False``. The band
-    is the active-learning sample support — exactly the pairs the
+def _emit_accept(posterior_fn, cutoff, band=None):
+    """Score pairs IN the tile with the broadcast calibrator
+    (``posterior_fn(sim, jw) -> p`` on numpy arrays) and emit ONLY exact
+    matches and pairs above ``cutoff``, plus ``match_probability``. This
+    is the second pass of the two-pass plan: at 10^12 candidate pairs the
+    full pair table is tens of TB — the accepted set is the only thing
+    worth materializing.
+
+    ``band`` = (delta, cap[, k_top]): ALSO emit up to ``cap`` non-accepted
+    pairs per tile with posterior within ±delta of the cutoff (closest
+    first, deterministic index tiebreak), flagged ``accepted=False``. The
+    band is the active-learning sample support — exactly the pairs the
     reference's kernel-weighted sampler would draw (R/fuzzylink.R:268-282)
     — emitted WITHOUT ever materializing the full pair table."""
 
-    def _gemm_melt(key, a_pdf: pd.DataFrame, b_pdf: pd.DataFrame) -> pd.DataFrame:
-        """One (block, sa, sb) tile: GEMM over the two unique-key embedding
-        sets, melt to long pairs, batched JW — one Arrow batch end to end.
-        This IS the reference's per-block dense matrix + melt
-        (R/fuzzylink.R:113-172) without ever shuffling per-pair vectors;
-        the melt emits int ids (computed upstream in Catalyst), never the
-        strings themselves."""
-        if len(a_pdf) == 0 or len(b_pdf) == 0:
-            if accept is None:
-                return _EMPTY_MELT
-            return _EMPTY_ACCEPT if band is None else _EMPTY_BAND
-        sims, jw, exact, na, nb = _tile_features(a_pdf, b_pdf, encoder)
-        a_rep = np.repeat(a_pdf["id"].to_numpy(np.int64), nb)
-        b_rep = np.tile(b_pdf["id"].to_numpy(np.int64), na)
-        if accept is None:
-            return pd.DataFrame(
-                {
-                    "block_id": np.full(na * nb, key[0], dtype=np.int32),
-                    "a_id": a_rep,
-                    "b_id": b_rep,
-                    "sim": sims,
-                    "jw": jw,
-                    "exact": exact,
-                }
-            )
-        posterior_fn, cutoff = accept
+    def emit(cols, na, nb):
+        sims, jw, exact = cols["sim"], cols["jw"], cols["exact"]
         # posterior in float64 on the f32-valued features — bit-identical
         # to the classic path, where Catalyst casts the f32 IR columns to
         # double before the same posterior expression
@@ -191,131 +144,52 @@ def _gemm_melt_factory(encoder=None, accept=None, band=None):
                     else:
                         top_cols = np.argpartition(-cm, k_eff - 1, axis=1)[:, :k_eff]
                     keep[rows_rep + top_cols.ravel()] = True
-        out = {
-            "block_id": np.full(int(keep.sum()), key[0], dtype=np.int32),
-            "a_id": a_rep[keep],
-            "b_id": b_rep[keep],
-            "sim": sims[keep],
-            "jw": jw[keep],
-            "exact": exact[keep],
-            "match_probability": p[keep],
-        }
+        out = {name: col[keep] for name, col in cols.items()}
+        out["match_probability"] = p[keep]
         if band is not None:
             out["accepted"] = acc[keep]
-        return pd.DataFrame(out)
+        return out
 
-    return _gemm_melt
-
-
-ACCEPT_IR_SCHEMA = PAIR_IR_SCHEMA + ", match_probability double"
-BAND_IR_SCHEMA = ACCEPT_IR_SCHEMA + ", accepted boolean"
-
-_EMPTY_ACCEPT = _EMPTY_MELT.assign(
-    match_probability=pd.Series([], dtype="float64")
-)
-_EMPTY_BAND = _EMPTY_ACCEPT.assign(accepted=pd.Series([], dtype="bool"))
+    return emit
 
 
-def _gemm_melt_arrow_factory(encoder):
-    """Arrow-native variant of the PLAIN melt kernel (accept=None,
-    in-tile encoder path): identical tile math, but the output is built
-    as a ``pyarrow.Table`` directly from the kernel's numpy arrays
-    (zero-copy for every numeric column) and shipped through
-    ``applyInArrow`` — no pandas hop on the way out.
-
-    Measured on the zero-compute melt probe (scripts/melt_probe.py,
-    96M rows, pinned): the Arrow kernel with 512k-row batches is the only
-    variant whose T_32 beats T_8 (12.7s vs 13.3s; the pandas kernel is
-    13.2 vs 12.6) — a marginal but real widening of the single-JVM decode
-    wall the r4 decomposition identified. The same probe's packed-blob
-    mode (1 row / 128k pairs) runs 3x faster outright, but consuming
-    blobs requires in-kernel aggregation — which IS the two-pass plan;
-    at 10^12 pairs use ``fuzzylink_twopass``, not the classic melt."""
-    import pyarrow as pa
-
-    empty = pa.table({
-        "block_id": pa.array([], type=pa.int32()),
-        "a_id": pa.array([], type=pa.int64()),
-        "b_id": pa.array([], type=pa.int64()),
-        "sim": pa.array([], type=pa.float32()),
-        "jw": pa.array([], type=pa.float32()),
-        "exact": pa.array([], type=pa.bool_()),
-    })
-
-    def _melt(key, a_tbl: "pa.Table", b_tbl: "pa.Table") -> "pa.Table":
-        na, nb = a_tbl.num_rows, b_tbl.num_rows
-        if na == 0 or nb == 0:
-            return empty
-        a_keys = a_tbl.column("key").to_pylist()
-        b_keys = b_tbl.column("key").to_pylist()
-        A = encoder(a_keys)
-        B = encoder(b_keys)
-        sims = (A @ B.T).ravel()  # float32, the GEMM's native precision
-        jw = jaro_winkler_cross(
-            [k.lower() for k in a_keys], [k.lower() for k in b_keys]
-        ).ravel().astype(np.float32)
-        a_ci = a_tbl.column("ci").to_numpy(zero_copy_only=False)
-        b_ci = b_tbl.column("ci").to_numpy(zero_copy_only=False)
-        exact = np.repeat(a_ci, nb) == np.tile(b_ci, na)
-        n = na * nb
-        return pa.table({
-            "block_id": pa.array(
-                np.full(n, int(key[0].as_py()), dtype=np.int32)),
-            "a_id": pa.array(np.repeat(
-                a_tbl.column("id").to_numpy(zero_copy_only=False), nb)),
-            "b_id": pa.array(np.tile(
-                b_tbl.column("id").to_numpy(zero_copy_only=False), na)),
-            "sim": pa.array(sims),
-            "jw": pa.array(jw),
-            "exact": pa.array(exact),
-        })
-
-    return _melt
-
-
-def _hist_kernel_factory(encoder, bins: int, lo: float, hi: float):
-    """Per-cell kernel for pass 1 of the two-pass plan: emit the tile's
-    2-D (sim, jw) histogram of NON-exact pairs — <= bins^2 rows per tile
-    instead of na*nb. Exact pairs are excluded (they are forced to p=1
-    downstream and would only bias the mixture fit)."""
+def _emit_hist(bins: int, lo: float, hi: float):
+    """Pass 1 of the two-pass plan: the tile's 2-D (sim, jw) histogram of
+    NON-exact pairs — <= bins^2 rows per tile instead of na*nb. Exact
+    pairs are excluded (they are forced to p=1 downstream and would only
+    bias the mixture fit)."""
     width = (hi - lo) / bins
 
-    def _hist(key, a_pdf: pd.DataFrame, b_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(a_pdf) == 0 or len(b_pdf) == 0:
-            return pd.DataFrame({"bx": pd.Series([], dtype="int32"),
-                                 "by": pd.Series([], dtype="int32"),
-                                 "n": pd.Series([], dtype="int64")})
-        sims, jw, exact, _na, _nb = _tile_features(a_pdf, b_pdf, encoder)
-        nontrivial = ~exact
+    def emit(cols, na, nb):
+        nontrivial = ~cols["exact"]
         # bin in float64 so bucket edges match the classic path, which
         # bins the double-cast IR columns
-        s64 = sims[nontrivial].astype(np.float64)
-        j64 = jw[nontrivial].astype(np.float64)
+        s64 = cols["sim"][nontrivial].astype(np.float64)
+        j64 = cols["jw"][nontrivial].astype(np.float64)
         bx = np.clip(((s64 - lo) / width), 0, bins - 1).astype(np.int64)
         by = np.clip(((j64 - lo) / width), 0, bins - 1).astype(np.int64)
         counts = np.bincount(bx * bins + by, minlength=bins * bins)
         nz = np.nonzero(counts)[0]
-        return pd.DataFrame(
-            {
-                "bx": (nz // bins).astype(np.int32),
-                "by": (nz % bins).astype(np.int32),
-                "n": counts[nz].astype(np.int64),
-            }
-        )
+        return {
+            "bx": (nz // bins).astype(np.int32),
+            "by": (nz % bins).astype(np.int32),
+            "n": counts[nz].astype(np.int64),
+        }
 
-    return _hist
+    return emit
 
 
-def _salted_side(u: DataFrame, emb: DataFrame | None, block_k: DataFrame,
-                 own: str, other: str, case_insensitive: bool = True) -> DataFrame:
-    """Attach int ids + 2-D tile coordinates (and, on the external-
-    embedding path, the vectors) to one distinct-key side.
+def _salted_side(u: DataFrame, block_k: DataFrame, own: tuple, other: tuple,
+                 case_insensitive: bool = True) -> DataFrame:
+    """Attach int ids + 2-D tile coordinates to one distinct-key side.
 
     ``block_k`` maps block_key -> (block_id, ka, kb): the within-block pair
     matrix is tiled ka × kb (blocked-GEMM style). Each side hashes into its
     own coordinate and replicates across the other's — so replication is
     O(sqrt(cells)) per side instead of O(cells) on one side, which keeps
-    the shuffled volume near-minimal for any block size.
+    the shuffled volume near-minimal for any block size. ``own`` and
+    ``other`` are (grid column, tile coordinate) name pairs: ("ka", "sa")
+    and ("kb", "sb") for the A side, swapped for the B side.
 
     Ids computed here (Catalyst, O(n) side rows — never per pair):
     ``block_id`` = the plan's DENSE int32 rank (collision-free; the melt
@@ -327,40 +201,37 @@ def _salted_side(u: DataFrame, emb: DataFrame | None, block_k: DataFrame,
     ``u`` (block_salt_plan's full-outer stats guarantee it when built from
     the same sides); uncovered rows are dropped — grouping them under a
     shared fallback id would cross-pair unrelated blocks."""
-    side = u.join(emb, "key") if emb is not None else u
     # ka/kb are non-null by plan construction (greatest(..., 1)); rows the
     # plan does not cover have null block_id and are dropped wholesale
-    flagged = side.join(F.broadcast(block_k), "block_key", "left").where(
+    flagged = u.join(F.broadcast(block_k), "block_key", "left").where(
         F.col("block_id").isNotNull()
     )
+    (own_k, own_s), (other_k, other_s) = own, other
     ci = F.xxhash64(F.lower(F.col("key"))) if case_insensitive else F.xxhash64(F.col("key"))
-    own_salt = F.pmod(F.xxhash64(F.col("key")), F.col(own)).cast("int")
+    own_salt = F.pmod(F.xxhash64(F.col("key")), F.col(own_k)).cast("int")
     return (
         flagged
         .withColumn("id", F.xxhash64(F.col("key")))
         .withColumn("ci", ci)
-        .withColumn("_own", own_salt)
-        .withColumn("_other_raw", F.explode(F.sequence(F.lit(0), F.col(other) - 1)))
-        .withColumn("_other", F.col("_other_raw").cast("int"))
+        .withColumn(own_s, own_salt)
+        .withColumn("_other_raw", F.explode(F.sequence(F.lit(0), F.col(other_k) - 1)))
+        .withColumn(other_s, F.col("_other_raw").cast("int"))
         .drop("ka", "kb", "_other_raw", "block_key")
     )
 
 
 def block_salt_plan(uA: DataFrame, uB: DataFrame, pair_budget: int = 50_000,
-                    max_salt: int = 4096,
                     target_cells: int | None = None) -> DataFrame:
     """Adaptive 2-D tiling plan: per block, split the |uA| x |uB| pair
     matrix into ~(|uA|x|uB|/pair_budget) cells arranged as a ka x kb grid
     with roughly square tiles. Bounds every GEMM cell's pair count (task
     skew AND peak memory) for any blocking-key skew — lang='en' at web
-    scale becomes thousands of uniform tiles.
+    scale becomes thousands of uniform tiles (at most ``_MAX_CELLS`` per
+    block).
 
-    Also assigns each block a DENSE int32 ``block_id`` (row_number by
-    block_key over the full-outer union of both sides' blocks) — the
+    Also assigns each block a DENSE int32 ``block_id`` (its 1-based rank
+    by block_key over the union of both sides' blocks) — the
     collision-free 4-byte block identity the melt IR carries per pair.
-    The plan is broadcast-sized by contract (it is broadcast onto the
-    sides), so the single-partition ranking window is bounded by the
-    same assumption.
 
     ``target_cells`` (usually ~2-3x the cluster's core count) additionally
     SHRINKS the effective budget when the data is small relative to the
@@ -381,8 +252,6 @@ def block_salt_plan(uA: DataFrame, uB: DataFrame, pair_budget: int = 50_000,
     numerically identical to the Catalyst formulation (same double-
     division + ceil ops; Python string sort == Spark UTF8 binary order
     for valid Unicode)."""
-    import math
-
     # ONE aggregation over the tagged union replaces two per-side groupBys
     # + a full-outer join (the driver assembles the outer join from the
     # collected (block_key, side, n) rows): fewer chained stages in the
@@ -409,7 +278,7 @@ def block_salt_plan(uA: DataFrame, uB: DataFrame, pair_budget: int = 50_000,
     total_cells = 0
     for bid, r in enumerate(sorted(rows, key=lambda r: r["block_key"]), 1):
         n_a, n_b = r["n_a"], r["n_b"]
-        cells = min(max(math.ceil(n_a * n_b / pair_budget), 1), max_salt)
+        cells = min(max(math.ceil(n_a * n_b / pair_budget), 1), _MAX_CELLS)
         # square-ish grid: ka/kb proportional to side sizes, ka*kb >= cells
         ka = min(max(math.ceil(math.sqrt(cells * n_a / max(n_b, 1))), 1),
                  max(n_a, 1))
@@ -450,10 +319,7 @@ def plan_info_of(plan: DataFrame, uA: DataFrame, uB: DataFrame) -> dict:
 def prepare_tiles(
     uA: DataFrame,
     uB: DataFrame,
-    emb: DataFrame | None = None,
-    encoder=None,
     pair_budget: int = 250_000,
-    max_salt: int = 4096,
     case_insensitive: bool = True,
     salt_plan: DataFrame | None = None,
 ) -> tuple:
@@ -468,49 +334,35 @@ def prepare_tiles(
     ``cogrouped_pair_histogram(..., prepared=cogroup)``; the CALLER owns
     the two persisted side DataFrames in ``persisted`` and must unpersist
     them when done."""
-    a, b = _tile_sides(uA, uB, emb, encoder, pair_budget, max_salt,
-                       case_insensitive, salt_plan)
+    a, b = _tile_sides(uA, uB, pair_budget, case_insensitive, salt_plan)
     a = a.persist()
     b = b.persist()
-    cg = a.groupby("block_id", "sa", "sb").cogroup(
-        b.groupby("block_id", "sa", "sb")
-    )
-    return cg, [a, b]
+    return _cogroup(a, b), [a, b]
 
 
 def _tile_sides(
     uA: DataFrame,
     uB: DataFrame,
-    emb: DataFrame | None,
-    encoder,
     pair_budget: int,
-    max_salt: int,
     case_insensitive: bool,
     salt_plan: DataFrame | None = None,
 ):
     """Shared tile machinery: adaptive 2-D salt plan, id/tile-coordinate
-    attachment, pinned repartition, and the cogroup handle ready for any
-    per-tile kernel (melt / filtered melt / histogram). Pass a
-    pre-computed (persisted) ``salt_plan`` to share one tiling across
-    multiple passes over the same sides (the production pipelines all do —
-    fewer planning jobs, guaranteed-identical tile boundaries across
-    passes, and the CALLER owns the persist/unpersist lifecycle). Without
-    one, the plan is built inline UNPERSISTED (recomputed by each of its
-    ~4 consumers — fine for one-shot/test use, and nothing is left cached
-    behind the caller's back)."""
-    if emb is None and encoder is None:
-        raise ValueError("need an encoder or an embedding table")
+    attachment and the pinned repartition of both sides, ready for
+    ``_cogroup``. Pass a pre-computed (persisted) ``salt_plan`` to share
+    one tiling across multiple passes over the same sides (the production
+    pipelines all do — fewer planning jobs, guaranteed-identical tile
+    boundaries across passes, and the CALLER owns the persist/unpersist
+    lifecycle). Without one, the plan is built inline UNPERSISTED
+    (recomputed by each of its ~4 consumers — fine for one-shot/test use,
+    and nothing is left cached behind the caller's back)."""
 
-    def _fresh(df: DataFrame | None) -> DataFrame | None:
-        if df is None:
-            return None
+    def _fresh(df: DataFrame) -> DataFrame:
         return df.select(*[F.col(c).alias(c) for c in df.columns])
 
-    emb_used = None if encoder is not None else emb
     sc = uA.sparkSession.sparkContext
     block_k = salt_plan if salt_plan is not None else block_salt_plan(
-        uA, uB, pair_budget, max_salt,
-        target_cells=sc.defaultParallelism * 3)
+        uA, uB, pair_budget, target_cells=sc.defaultParallelism * 3)
     info = getattr(block_k, "_fl_plan_info", None)
     if info is not None:
         total_cells = max(int(info["total_cells"]), 1)
@@ -525,44 +377,27 @@ def _tile_sides(
     # launches per action (measured: melt noop 0.905s @4x, 0.702s @2x).
     # AQE is pinned off this exchange by the explicit repartition-by-num.
     n_part = int(min(max(sc.defaultParallelism * 2, total_cells * 2), 65536))
-    a = _salted_side(_fresh(uA), _fresh(emb_used), _fresh(block_k), own="ka",
-                     other="kb", case_insensitive=case_insensitive)
-    a = a.withColumnRenamed("_own", "sa").withColumnRenamed("_other", "sb")
-    a = a.repartition(n_part, "block_id", "sa", "sb")
-    b = _salted_side(_fresh(uB), _fresh(emb_used), _fresh(block_k), own="kb",
-                     other="ka", case_insensitive=case_insensitive)
-    b = b.withColumnRenamed("_own", "sb").withColumnRenamed("_other", "sa")
-    b = b.repartition(n_part, "block_id", "sa", "sb")
-    return a, b
+    a = _salted_side(_fresh(uA), _fresh(block_k), ("ka", "sa"), ("kb", "sb"),
+                     case_insensitive)
+    b = _salted_side(_fresh(uB), _fresh(block_k), ("kb", "sb"), ("ka", "sa"),
+                     case_insensitive)
+    return (a.repartition(n_part, "block_id", "sa", "sb"),
+            b.repartition(n_part, "block_id", "sa", "sb"))
 
 
-def _cogrouped_tiles(
-    uA: DataFrame,
-    uB: DataFrame,
-    emb: DataFrame | None,
-    encoder,
-    pair_budget: int,
-    max_salt: int,
-    case_insensitive: bool,
-    salt_plan: DataFrame | None = None,
-):
-    a, b = _tile_sides(uA, uB, emb, encoder, pair_budget, max_salt,
-                       case_insensitive, salt_plan)
-    return a.groupby("block_id", "sa", "sb").cogroup(
-        b.groupby("block_id", "sa", "sb")
-    )
+def _cogroup(a: DataFrame, b: DataFrame):
+    """The (block_id, sa, sb) tile cogroup of two salted sides."""
+    return a.groupby("block_id", "sa", "sb").cogroup(b.groupby("block_id", "sa", "sb"))
 
 
 def cogrouped_pair_histogram(
     uA: DataFrame,
     uB: DataFrame,
-    emb: DataFrame | None = None,
-    encoder=None,
+    encoder,
     bins: int = 200,
     lo: float = -1.0,
     hi: float = 1.0,
     pair_budget: int = 250_000,
-    max_salt: int = 4096,
     case_insensitive: bool = True,
     salt_plan: DataFrame | None = None,
     prepared=None,
@@ -574,68 +409,54 @@ def cogrouped_pair_histogram(
     calibrate. Multi-block duplicate pairs are counted once per block
     (a <=0.01%-mass bias on realistic blocking; the calibrator fits
     distribution shape, not exact counts)."""
-    cg = prepared if prepared is not None else _cogrouped_tiles(
-        uA, uB, emb, encoder, pair_budget, max_salt, case_insensitive,
-        salt_plan=salt_plan)
-    per_tile = cg.applyInPandas(
-        _hist_kernel_factory(encoder, bins, lo, hi),
-        schema="bx int, by int, n long",
-    )
+    cg = prepared if prepared is not None else _cogroup(
+        *_tile_sides(uA, uB, pair_budget, case_insensitive, salt_plan))
+    per_tile = cg.applyInArrow(_tile_kernel(encoder, _emit_hist(bins, lo, hi)),
+                               schema=HIST_SCHEMA)
     return per_tile.groupBy("bx", "by").agg(F.sum("n").alias("n"))
 
 
 def cogrouped_pair_features(
     uA: DataFrame,
     uB: DataFrame,
-    emb: DataFrame | None = None,
-    encoder=None,
+    encoder,
     pair_budget: int = 250_000,
-    max_salt: int = 4096,
     case_insensitive: bool = True,
     accept=None,
     band=None,
     salt_plan: DataFrame | None = None,
-    arrow_melt: bool = True,
     prepared=None,
 ) -> DataFrame:
     """Candidate generation + cosine + JW in ONE cogrouped Arrow pass,
     emitting the NUMERIC pair IR (block_id, a_id, b_id, sim, jw, exact).
 
-    Inputs are distinct (block_key, key) sides, plus either ``encoder``
-    (deterministic local encoder: keys are embedded inside each tile, so
-    the shuffle moves only strings) or ``emb`` (external embedding table,
-    joined on and shuffled with the sides). Pairs and their features are
-    *born* inside the per-(block, sa, sb) GEMM tile — shuffle volume never
-    includes a per-pair vector, and the melted O(n^2) rows never include a
-    string (join them back with ``attach_pair_strings`` where needed).
-    Every block is adaptively 2-D tiled so no tile exceeds ``pair_budget``
+    Inputs are distinct (block_key, key) sides and a deterministic local
+    ``encoder``: keys are embedded inside each tile, so the shuffle moves
+    only strings. Pairs and their features are *born* inside the
+    per-(block, sa, sb) GEMM tile — shuffle volume never includes a
+    per-pair vector, and the melted O(n^2) rows never include a string
+    (join them back with ``attach_pair_strings`` where needed). Every
+    block is adaptively 2-D tiled so no tile exceeds ``pair_budget``
     pairs: uniform tasks, bounded memory.
 
     ``accept`` = (posterior_fn, cutoff) turns this into pass 2 of the
     two-pass plan: pairs are scored in-tile with the broadcast calibrator
     and only exact matches + pairs above the cutoff are emitted (schema
     gains ``match_probability``) — the full pair table never exists.
-    ``band`` = (delta, per_tile_cap) additionally emits the bounded
-    uncertainty band around the cutoff with an ``accepted`` flag (the
-    active-learning sample support; see ``_gemm_melt_factory``).
+    ``band`` = (delta, per_tile_cap[, k_top]) additionally emits the
+    bounded uncertainty band around the cutoff with an ``accepted`` flag
+    (the active-learning sample support; see ``_emit_accept``).
     """
     if band is not None and accept is None:
         raise ValueError("band emission requires accept=(posterior_fn, cutoff)")
-    cg = prepared if prepared is not None else _cogrouped_tiles(
-        uA, uB, emb, encoder, pair_budget, max_salt, case_insensitive,
-        salt_plan=salt_plan)
-    if accept is None and encoder is not None and arrow_melt:
-        # plain melt on the in-tile-encoder path: Arrow-native kernel
-        # (pa.Table out of the numpy arrays, no pandas hop) — same values
-        # bit-for-bit (pytest parity), slightly wider through the
-        # single-JVM decode wall (see _gemm_melt_arrow_factory). The
-        # accept/band kernels emit few rows; decode is not their limiter.
-        return cg.applyInArrow(_gemm_melt_arrow_factory(encoder),
-                               schema=PAIR_IR_SCHEMA)
-    schema = (PAIR_IR_SCHEMA if accept is None
-              else (ACCEPT_IR_SCHEMA if band is None else BAND_IR_SCHEMA))
-    return cg.applyInPandas(_gemm_melt_factory(encoder, accept, band),
-                            schema=schema)
+    cg = prepared if prepared is not None else _cogroup(
+        *_tile_sides(uA, uB, pair_budget, case_insensitive, salt_plan))
+    if accept is None:
+        emit, schema = _emit_melt, PAIR_IR_SCHEMA
+    else:
+        emit = _emit_accept(*accept, band=band)
+        schema = ACCEPT_IR_SCHEMA if band is None else BAND_IR_SCHEMA
+    return cg.applyInArrow(_tile_kernel(encoder, emit), schema=schema)
 
 
 def pair_dictionaries(uA: DataFrame, uB: DataFrame,

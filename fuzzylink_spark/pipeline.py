@@ -694,7 +694,7 @@ def _twopass_body(spark, dfA, dfB, config, bins, labeler, al_band_delta,
     # pass) read cached, already-partitioned blocks and elide the cogroup
     # exchange (r6)
     tiles, tile_sides = prepare_tiles(
-        uA, uB, encoder=encoder, pair_budget=config.salt_pair_threshold,
+        uA, uB, pair_budget=config.salt_pair_threshold,
         case_insensitive=config.exact_case_insensitive, salt_plan=salt_plan)
     if persisted is not None:
         persisted.extend(tile_sides)  # released by the caller on any raise

@@ -59,7 +59,7 @@ def get_spark(
         # tile: 512k-row Arrow batches (~15 MB at 29 B/pair) cut the
         # per-batch JVM hand-off count ~50x vs the 10k default; the r5
         # melt probe measured 512k as the best decode width at local[32]
-        # (scripts/melt_probe.py: 12.7s vs 13.5s for 128k on 96M rows)
+        # (BENCH/BASELINE.md, round 5: 12.7s vs 13.5s for 128k on 96M rows)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "524288")
         # free pandas-side Arrow buffers eagerly inside cogroup kernels
         .config("spark.sql.execution.arrow.pyspark.selfDestruct.enabled", "true")

@@ -1,4 +1,4 @@
-"""Unit tests per operator: encoder, cosine, candidates+salting, cutoff,
+"""Unit tests per operator: encoder, cosine, cutoff,
 sampling, EM mixture, connected components."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from fuzzylink_spark.functions.vectors import embed_strings, embed_keys
-from fuzzylink_spark.operators.candidates import candidate_pairs, find_hot_blocks
 from fuzzylink_spark.operators.clustering import (
     clusters_to_pairs,
     connected_components,
@@ -53,38 +52,6 @@ def test_embed_keys_distinct(spark):
     assert out.count() == 2
     row = out.where("key = 'a'").first()
     assert len(row["embedding"]) == 32
-
-
-# --- candidates + salting ----------------------------------------------------
-
-def test_candidate_pairs_plain_and_salted_agree(spark):
-    uA = spark.createDataFrame(
-        [("b1", f"a{i}") for i in range(20)] + [("b2", "x")],
-        "block_key string, key string",
-    )
-    uB = spark.createDataFrame(
-        [("b1", f"b{i}") for i in range(15)] + [("b2", "y")],
-        "block_key string, key string",
-    )
-    plain = candidate_pairs(uA, uB, salt_buckets=1)
-    hot = spark.createDataFrame([("b1",)], "block_key string")
-    salted = candidate_pairs(uA, uB, salt_buckets=4, salted_blocks=hot)
-    assert plain.count() == 20 * 15 + 1
-    assert salted.count() == plain.count()
-    assert plain.select("A", "B").exceptAll(salted.select("A", "B")).count() == 0
-
-
-def test_find_hot_blocks(spark):
-    uA = spark.createDataFrame(
-        [("big", f"a{i}") for i in range(100)] + [("small", "a")],
-        "block_key string, key string",
-    )
-    uB = spark.createDataFrame(
-        [("big", f"b{i}") for i in range(100)] + [("small", "b")],
-        "block_key string, key string",
-    )
-    hot = find_hot_blocks(uA, uB, threshold=5000)
-    assert [r["block_key"] for r in hot.collect()] == ["big"]
 
 
 # --- cutoff ------------------------------------------------------------------

@@ -52,20 +52,27 @@ def test_whole_stage_codegen_on_text_analysis(spark, docs):
 
 def test_cogroup_partitioning_pinned(spark):
     """The featurization cogroup must hash-partition on the tile key with
-    an explicit (AQE-immune) partition count."""
+    an explicit (AQE-immune) partition count, and every tile output
+    (melt, accept, band, histogram) must run the one Arrow kernel."""
     from fuzzylink_spark.operators.candidates import unique_keys_per_block
     from fuzzylink_spark.operators.blocking import add_block_key
     from fuzzylink_spark.functions.vectors import embed_strings
-    from fuzzylink_spark.operators.features import cogrouped_pair_features
+    from fuzzylink_spark.operators.features import (
+        cogrouped_pair_features, cogrouped_pair_histogram)
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     keyed = add_block_key(docs.select(F.substring("text", 1, 30).alias("k"), "lang"), ["lang"])
     u = unique_keys_per_block(keyed, "k")
-    cg = cogrouped_pair_features(u, u, encoder=lambda ks: embed_strings(ks, dim=32),
-                                 pair_budget=1000)
-    plan = cg._jdf.queryExecution().executedPlan().toString()
-    # round 5: the plain melt ships through the Arrow-native kernel
-    # (FlatMapCoGroupsInArrow); accept=... paths keep the pandas kernel
-    assert ("FlatMapCoGroupsInArrow" in plan
-            or "FlatMapCoGroupsInPandas" in plan)
-    assert "REPARTITION_BY_NUM" in plan or "hashpartitioning" in plan
+    kw = dict(encoder=lambda ks: embed_strings(ks, dim=32), pair_budget=1000)
+    accept = (lambda x, y: x, 0.5)
+    outputs = {
+        "melt": cogrouped_pair_features(u, u, **kw),
+        "accept": cogrouped_pair_features(u, u, accept=accept, **kw),
+        "band": cogrouped_pair_features(u, u, accept=accept, band=(0.1, 5), **kw),
+        "hist": cogrouped_pair_histogram(u, u, **kw),
+    }
+    for name, df in outputs.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapCoGroupsInArrow" in plan, name
+        assert "FlatMapCoGroupsInPandas" not in plan, name
+        assert "REPARTITION_BY_NUM" in plan or "hashpartitioning" in plan, name

@@ -80,32 +80,87 @@ def test_max_pos_per_fp_zero_rejected():
         exact_substring_pairs(None, max_pos_per_fp=-3)
 
 
-def test_arrow_melt_parity_with_pandas(spark):
-    """The Arrow-native plain-melt kernel (applyInArrow, r5) must emit
-    bit-identical pair IR to the pandas kernel — same tiles, same GEMM,
-    same narrow schema."""
+def test_tile_outputs_consistent(spark):
+    """Melt, accept, band and histogram all come from the one tile
+    kernel: under one salt plan (with a one-sided block, so some cogroup
+    groups have an empty side) accept is exactly the melt rows the
+    posterior keeps, band extends accept with a matching flag, and the
+    histogram is the bincount of the melt's non-exact pairs."""
+    import numpy as np
+
     from fuzzylink_spark.operators.blocking import add_block_key
     from fuzzylink_spark.operators.candidates import unique_keys_per_block
-    from fuzzylink_spark.operators.features import cogrouped_pair_features
+    from fuzzylink_spark.operators.features import (
+        block_salt_plan, cogrouped_pair_features, cogrouped_pair_histogram)
     from fuzzylink_spark.functions.vectors import embed_strings
 
     dfa, dfb, _ = voters(spark, n_base=50, seed=13)
-    uA = unique_keys_per_block(
-        add_block_key(dfa, ["city"]), "full_name")
-    uB = unique_keys_per_block(
-        add_block_key(dfb, ["city"]), "full_name")
+    # a one-sided block, and a case-insensitive exact match
+    extra_a = spark.createDataFrame(
+        [("only_a", "Solo Person"), ("only_a", "Another Solo"),
+         ("both", "Jane Q Public")], "block_key string, key string")
+    extra_b = spark.createDataFrame(
+        [("both", "JANE Q PUBLIC"), ("both", "John Doe")],
+        "block_key string, key string")
+    uA = unique_keys_per_block(add_block_key(dfa, ["city"]),
+                               "full_name").unionByName(extra_a)
+    uB = unique_keys_per_block(add_block_key(dfb, ["city"]),
+                               "full_name").unionByName(extra_b)
+    plan = block_salt_plan(uA, uB, 1000)
+    one_sided = plan.where("block_key = 'only_a'").first()["block_id"]
 
     def enc(keys):
         return embed_strings(keys, dim=32)
 
-    def rows(arrow):
-        out = cogrouped_pair_features(uA, uB, encoder=enc,
-                                      arrow_melt=arrow)
-        assert out.columns == ["block_id", "a_id", "b_id", "sim", "jw",
-                               "exact"]
-        return sorted(map(tuple, out.collect()))
+    def _toy_posterior(x, y):
+        # float64 arithmetic only: no transcendental whose last bit could
+        # depend on how numpy vectorizes a particular array length
+        return (x + 2.0 * y) / 3.0
 
-    assert rows(True) == rows(False)
+    cut, bins = 0.55, 50
+    kw = dict(encoder=enc, pair_budget=1000, salt_plan=plan)
+    melt = cogrouped_pair_features(uA, uB, **kw).collect()
+    acc = cogrouped_pair_features(uA, uB, accept=(_toy_posterior, cut),
+                                  **kw).collect()
+    band = cogrouped_pair_features(uA, uB, accept=(_toy_posterior, cut),
+                                   band=(0.2, 30, 1), **kw).collect()
+    hist = cogrouped_pair_histogram(uA, uB, bins=bins, **kw).collect()
+
+    assert melt and all(r["block_id"] != one_sided for r in melt)
+    exact = np.array([r["exact"] for r in melt])
+    sim = np.array([r["sim"] for r in melt], dtype=np.float32)
+    jw = np.array([r["jw"] for r in melt], dtype=np.float32)
+    assert exact.any() and not exact.all()
+    p = np.where(exact, 1.0, _toy_posterior(sim.astype(np.float64),
+                                            jw.astype(np.float64)))
+    by_pair = {tuple(r[:3]): (tuple(r), pi) for r, pi in zip(melt, p)}
+    assert len(by_pair) == len(melt)
+    want_acc = {k: v for k, v in by_pair.items() if v[0][5] or v[1] > cut}
+    assert 0 < len(want_acc) < len(melt)
+
+    got_acc = {tuple(r[:3]): (tuple(r[:6]), r["match_probability"])
+               for r in acc}
+    assert len(got_acc) == len(acc)
+    assert got_acc == want_acc
+
+    got_band = {tuple(r[:3]): r for r in band}
+    assert len(got_band) == len(band) > len(acc)
+    assert set(got_acc) <= set(got_band)
+    for k, r in got_band.items():
+        row, pi = by_pair[k]
+        assert tuple(r[:6]) == row and r["match_probability"] == pi
+        assert r["accepted"] == (k in want_acc)
+
+    lo, hi = -1.0, 1.0
+    width = (hi - lo) / bins
+    s64 = sim[~exact].astype(np.float64)
+    j64 = jw[~exact].astype(np.float64)
+    bx = np.clip((s64 - lo) / width, 0, bins - 1).astype(np.int64)
+    by = np.clip((j64 - lo) / width, 0, bins - 1).astype(np.int64)
+    counts = np.bincount(bx * bins + by, minlength=bins * bins)
+    want_hist = {(int(i // bins), int(i % bins)): int(counts[i])
+                 for i in np.nonzero(counts)[0]}
+    assert {(r["bx"], r["by"]): r["n"] for r in hist} == want_hist
 
 
 def test_anchor_extend_pathological_repeats_bounded(spark):

@@ -97,6 +97,46 @@ def test_jw_cross_native_and_numpy_paths_agree(monkeypatch):
     assert np.array_equal(jaro_winkler_cross(xs, ys), want)
 
 
+def test_jw_native_refuses_shared_cache_dir(tmp_path, monkeypatch, caplog):
+    """A group/world-writable cache dir (even the explicit override) could
+    hold a planted shared object: the loader must refuse it, keep the
+    numpy path and warn exactly once."""
+    import logging
+
+    import fuzzylink_spark.functions._jw_native as njw
+
+    shared = tmp_path / "shared"
+    shared.mkdir()
+    shared.chmod(0o777)
+    monkeypatch.setenv("FUZZYLINK_NATIVE_CACHE", str(shared))
+    monkeypatch.setattr(njw, "_FN", None)
+    monkeypatch.setattr(njw, "_TRIED", False)
+    with caplog.at_level(logging.WARNING, logger=njw.__name__):
+        assert njw.jw_cross_native() is None
+        assert njw.jw_cross_native() is None
+    warned = [r for r in caplog.records if r.name == njw.__name__]
+    assert len(warned) == 1 and warned[0].levelno == logging.WARNING
+    assert "world-writable" in warned[0].getMessage()
+    assert list(shared.iterdir()) == []
+    assert jaro_winkler_cross(["martha"], ["marhta"])[0, 0] > 0.9
+
+
+def test_jw_native_default_cache_dir_is_private(tmp_path, monkeypatch):
+    """Without the override the cache lives in a per-user dir created
+    0700 under the temp dir."""
+    import os
+    import stat
+    import tempfile
+
+    import fuzzylink_spark.functions._jw_native as njw
+
+    monkeypatch.delenv("FUZZYLINK_NATIVE_CACHE", raising=False)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    d = njw._cache_dir()
+    assert d == os.path.join(str(tmp_path), f"fuzzylink_native-{os.getuid()}")
+    assert stat.S_IMODE(os.stat(d).st_mode) == 0o700
+
+
 def test_p4_removal_driver_and_distributed_paths_agree(spark, monkeypatch):
     """The driver-computed P4 removal list and the distributed fallback
     (caps forced to the degenerate branch) must produce the same pair
