@@ -13,7 +13,7 @@ that ``ctypes`` loads. A refused dir, a missing compiler or any other
 build failure degrades to ``None`` (logged once at WARN) and the caller
 keeps the numpy path.
 
-Bit-identity contract (pinned by tests/test_round6.py): every float64
+Bit-identity contract (pinned by tests/test_jaro_winkler.py): every float64
 expression is written in exactly the order the numpy kernel evaluates it
 (IEEE 754 double ops are exactly rounded, so equal operand order means
 equal bits), the greedy lowest-bit matching is identical integer logic,

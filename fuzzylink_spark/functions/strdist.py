@@ -164,136 +164,25 @@ def qgram_cosine_dist(s1: str, s2: str, q: int = 1) -> float:
 
 
 # ---------------------------------------------------------------------------
-# bit-parallel batched Jaro-Winkler (one x vs many y at once)
+# bit-parallel Jaro-Winkler cross kernel (many x vs many y at once)
 # ---------------------------------------------------------------------------
+
+
+def _pad_codes(strs: list[str], maxlen: int) -> tuple[np.ndarray, np.ndarray]:
+    """(codes, lengths): (N, maxlen) int32 codepoints padded with -1."""
+    n = len(strs)
+    lens = np.fromiter((len(s) for s in strs), dtype=np.int64, count=n)
+    codes = np.full((n, max(maxlen, 1)), -1, dtype=np.int32)
+    for i, s in enumerate(strs):
+        if s:
+            codes[i, : len(s)] = np.frombuffer(
+                s.encode("utf-32-le", "surrogatepass"), dtype=np.uint32
+            ).astype(np.int32)
+    return codes, lens
+
 
 _ALL64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 _ONE = np.uint64(1)
-
-
-class JaroBatch:
-    """Precomputed B-side for vectorized JW: per-character 64-bit position
-    masks across all y strings. One ``scores(x)`` call runs the exact Jaro
-    greedy matching for x against every y simultaneously — each of the
-    len(x) steps is a handful of uint64 NumPy ops over the whole batch
-    (~15x faster than the scalar loop at typical key lengths).
-
-    Strings longer than 64 chars fall back to the scalar kernel (same
-    semantics); linkage keys are far shorter in practice.
-    """
-
-    def __init__(self, ys: list[str]):
-        self.ys = ys
-        n = len(ys)
-        self.lens = np.fromiter((len(y) for y in ys), dtype=np.int64, count=n)
-        self.too_long = self.lens > 64
-        maxlen = int(min(self.lens.max() if n else 0, 64))
-        self.ycodes = np.full((n, max(maxlen, 1)), -1, dtype=np.int32)
-        for yi, y in enumerate(ys):
-            if y and len(y) <= 64:
-                self.ycodes[yi, : len(y)] = np.frombuffer(
-                    y.encode("utf-32-le", "surrogatepass"), dtype=np.uint32
-                ).astype(np.int32)
-        # per-char position bitmasks, built vectorized: position bits are
-        # disjoint within a row, so a masked sum equals the OR
-        bitvals = (_ONE << np.arange(self.ycodes.shape[1], dtype=np.uint64))[None, :]
-        self.charmask: dict[str, np.ndarray] = {}
-        for code in np.unique(self.ycodes):
-            if code < 0:
-                continue
-            self.charmask[chr(int(code))] = np.where(
-                self.ycodes == code, bitvals, np.uint64(0)
-            ).sum(axis=1, dtype=np.uint64)
-        self._zeros = np.zeros(n, dtype=np.uint64)
-
-    def scores(self, x: str, p: float = 0.1, max_prefix: int = 4) -> np.ndarray:
-        n = len(self.ys)
-        out = np.zeros(n, dtype=np.float64)
-        if n == 0:
-            return out
-        lx = len(x)
-        if lx == 0 or lx > 64:
-            for i, y in enumerate(self.ys):
-                out[i] = jaro_winkler(x, y, p, max_prefix)
-            return out
-
-        ly = self.lens
-        w = np.maximum(np.maximum(lx, ly) // 2 - 1, 0)
-        used = np.zeros(n, dtype=np.uint64)
-        y_pos = np.full((lx, n), 255, dtype=np.int16)  # matched y bit index per x pos
-        xc = np.fromiter((ord(c) for c in x), dtype=np.int32, count=lx)
-
-        # window masks for every (i, y) precomputed in a handful of
-        # whole-matrix ops (the loop body then stays at ~6 small ops per
-        # character — numpy call overhead is the cost at tile scale)
-        i_arr = np.arange(lx, dtype=np.int64)[:, None]
-        hi = np.minimum(ly[None, :], i_arr + w[None, :] + 1).astype(np.uint64)
-        lo = np.maximum(0, i_arr - w[None, :]).astype(np.uint64)
-        hi_mask = np.where(hi >= 64, _ALL64, (_ONE << hi) - _ONE)
-        win_mask = hi_mask & ~((_ONE << lo) - _ONE)
-
-        for i in range(lx):
-            cm = self.charmask.get(x[i])
-            if cm is None:
-                continue
-            cand = cm & win_mask[i] & ~used
-            bit = cand & (~cand + _ONE)  # lowest set bit
-            used |= bit
-            # bit index (bit is a power of two; float64 log2 is exact);
-            # maximum(bit, 1) keeps log2 off zero, unmatched -> 255
-            idx = np.log2(np.maximum(bit, _ONE).astype(np.float64)).astype(np.int16)
-            y_pos[i] = np.where(cand != 0, idx, np.int16(255))
-
-        matched = y_pos != 255
-        m = matched.sum(axis=0)
-        maxm = int(m.max()) if n else 0
-
-        # transpositions: compare k-th matched x char (x order) with k-th
-        # matched y char (y order). Both sequences are built by scatter +
-        # prefix-sum compaction — single C passes over small-dtype arrays
-        # instead of two (lx, n) argsorts; this kernel runs inside 32
-        # concurrent Python workers, so allocation/bandwidth is the cost.
-        if maxm == 0:
-            t = np.zeros(n)
-        else:
-            # seqX: x chars of matched positions, compacted in i order
-            rank_i = np.cumsum(matched, axis=0, dtype=np.int16) - 1
-            ri, ci = np.nonzero(matched)
-            seq_x = np.zeros((maxm, n), dtype=np.int32)
-            seq_x[rank_i[ri, ci], ci] = xc[ri]
-            # seqY: y chars of matched y positions, compacted in y order
-            ymax = self.ycodes.shape[1]
-            flag = np.zeros((ymax, n), dtype=bool)
-            flag[y_pos[ri, ci].astype(np.int64), ci] = True
-            rank_y = np.cumsum(flag, axis=0, dtype=np.int16) - 1
-            fi, fc = np.nonzero(flag)
-            seq_y = np.zeros((maxm, n), dtype=np.int32)
-            seq_y[rank_y[fi, fc], fc] = self.ycodes[fc, fi]
-            valid = np.arange(maxm)[:, None] < m[None, :]
-            t = ((seq_x != seq_y) & valid).sum(axis=0) / 2.0
-
-        safe_m = np.maximum(m, 1)
-        jaro = np.where(
-            m == 0,
-            0.0,
-            (m / lx + m / np.maximum(ly, 1) + (safe_m - t) / safe_m) / 3.0,
-        )
-        # prefix bonus: common prefix up to max_prefix
-        kp = min(max_prefix, lx, self.ycodes.shape[1])
-        if kp > 0:
-            eq = self.ycodes[:, :kp] == xc[None, :kp]
-            prefix = np.cumprod(eq, axis=1).sum(axis=1)
-        else:
-            prefix = np.zeros(n, dtype=np.int64)
-        jw = jaro + prefix * p * (1.0 - jaro)
-        # identical strings (incl. both empty) are exactly 1 (stringdist parity)
-        exact = np.fromiter((y == x for y in self.ys), dtype=bool, count=n)
-        jw = np.where(exact, 1.0, jw)
-        if self.too_long.any():
-            for i in np.nonzero(self.too_long)[0]:
-                jw[i] = jaro_winkler(x, self.ys[i], p, max_prefix)
-        return jw
-
 
 _JW_CHUNK_PAIRS = 1 << 16  # x-chunked so temporaries stay ~100 MB/worker
 
@@ -314,14 +203,14 @@ def _popcount64(v: np.ndarray) -> np.ndarray:
 def _jw_cross_block(xs: list[str], ys: list[str], xcodes: np.ndarray,
                     xlens: np.ndarray, ycodes: np.ndarray, ylens: np.ndarray,
                     p: float, max_prefix: int) -> np.ndarray:
-    """2-D vectorized Jaro-Winkler over an x-chunk: every per-x numpy pass
-    of ``JaroBatch.scores`` runs once over the whole (nx, ny) matrix
-    instead of nx times over (ny,) rows — the per-call numpy dispatch
-    overhead (the measured 98% of the tile kernel at typical key lengths)
-    amortizes across the chunk. Bit-identical to the row-at-a-time kernel:
-    the greedy lowest-bit matching is per-(x, y) integer logic regardless
-    of vectorization axis, and every float64 expression is the same
-    elementwise formula (pytest-pinned equality in test_round6.py).
+    """2-D vectorized Jaro-Winkler over an x-chunk: the greedy matching
+    walks the x positions once, and each step is a handful of uint64 numpy
+    ops over the whole (nx, ny) matrix of per-y position bitmasks, so the
+    per-call numpy dispatch overhead amortizes across the chunk. This is
+    the path on hosts without a C compiler (``_jw_native``). Bit-identical
+    to the scalar ``jaro_winkler``: the lowest-bit matching is the same
+    per-(x, y) integer logic, and every float64 expression is the same
+    formula in the same operand order (pinned by tests/test_jaro_winkler.py).
 
     Callers guarantee 1 <= len(x) <= 64 for every x row; y rows longer
     than 64 are handled by the caller's scalar fallback (their ycodes rows
@@ -438,62 +327,46 @@ def _jw_cross_block(xs: list[str], ys: list[str], xcodes: np.ndarray,
 
 
 def jaro_winkler_cross(xs: list[str], ys: list[str], p: float = 0.1) -> np.ndarray:
-    """All-pairs JW matrix (len(xs), len(ys)): 2-D vectorized kernel
-    (``_jw_cross_block``, x-chunked to bound temporaries), with the scalar
-    kernel covering the same edge cases the row-batched path did — empty
-    or >64-char x rows, >64-char y columns."""
+    """All-pairs JW matrix (len(xs), len(ys)): the native kernel when it
+    builds, else the 2-D numpy kernel (``_jw_cross_block``, x-chunked to
+    bound temporaries). The scalar kernel covers empty or >64-char x rows
+    and >64-char y columns."""
     nx, ny = len(xs), len(ys)
     out = np.empty((nx, ny), dtype=np.float64)
     if nx == 0 or ny == 0:
         return out
     max_prefix = 4
-    xlens_all = np.fromiter((len(x) for x in xs), dtype=np.int64, count=nx)
     ylens = np.fromiter((len(y) for y in ys), dtype=np.int64, count=ny)
     y_long = ylens > 64
-    maxly = int(min(ylens.max(), 64))
-    ycodes = np.full((ny, max(maxly, 1)), -1, dtype=np.int32)
-    for j, y in enumerate(ys):
-        if y and len(y) <= 64:
-            ycodes[j, : len(y)] = np.frombuffer(
-                y.encode("utf-32-le", "surrogatepass"), dtype=np.uint32
-            ).astype(np.int32)
+    # >64-char y columns are encoded empty; the scalar pass below scores them
+    ycodes, _ = _pad_codes([y if len(y) <= 64 else "" for y in ys],
+                           int(min(ylens.max(), 64)))
 
-    x_fallback = (xlens_all == 0) | (xlens_all > 64)
-    vec_rows = np.nonzero(~x_fallback)[0]
-    if len(vec_rows):
-        maxlx = int(xlens_all[vec_rows].max())
-        xcodes_all = np.full((nx, max(maxlx, 1)), -1, dtype=np.int32)
-        for r in vec_rows:
-            x = xs[r]
-            xcodes_all[r, : len(x)] = np.frombuffer(
-                x.encode("utf-32-le", "surrogatepass"), dtype=np.uint32
-            ).astype(np.int32)
+    vec_rows = [r for r, x in enumerate(xs) if 0 < len(x) <= 64]
+    if vec_rows:
+        vec_xs = [xs[r] for r in vec_rows]
+        xcodes, xlens = _pad_codes(vec_xs, max(len(x) for x in vec_xs))
         from fuzzylink_spark.functions._jw_native import jw_cross_c, jw_cross_native
 
         fn = jw_cross_native()
         if fn is not None:
             # native bit-parallel kernel (~10x the numpy path; bit-identical
-            # by construction — see _jw_native, pinned by test_round6.py)
-            out[vec_rows] = jw_cross_c(
-                fn, np.ascontiguousarray(xcodes_all[vec_rows]),
-                xlens_all[vec_rows], ycodes, ylens, p)
+            # by construction, see _jw_native)
+            out[vec_rows] = jw_cross_c(fn, xcodes, xlens, ycodes, ylens, p)
         else:
-            chunk = max(1, _JW_CHUNK_PAIRS // max(ny, 1))
+            chunk = max(1, _JW_CHUNK_PAIRS // ny)
             for s in range(0, len(vec_rows), chunk):
-                rows = vec_rows[s : s + chunk]
-                out[rows] = _jw_cross_block(
-                    [xs[r] for r in rows], ys, xcodes_all[rows],
-                    xlens_all[rows], ycodes, ylens, p, max_prefix)
-    for r in np.nonzero(x_fallback)[0]:
-        x = xs[r]
-        for j, y in enumerate(ys):
-            out[r, j] = jaro_winkler(x, y, p, max_prefix)
+                out[vec_rows[s : s + chunk]] = _jw_cross_block(
+                    vec_xs[s : s + chunk], ys, xcodes[s : s + chunk],
+                    xlens[s : s + chunk], ycodes, ylens, p, max_prefix)
+    for r, x in enumerate(xs):
+        if not 0 < len(x) <= 64:
+            out[r] = [jaro_winkler(x, y, p, max_prefix) for y in ys]
     if y_long.any():
         cols = np.nonzero(y_long)[0]
         for r in vec_rows:
-            x = xs[r]
             for j in cols:
-                out[r, j] = jaro_winkler(x, ys[j], p, max_prefix)
+                out[r, j] = jaro_winkler(xs[r], ys[j], p, max_prefix)
     return out
 
 
@@ -511,19 +384,6 @@ def jaro_winkler_cross(xs: list[str], ys: list[str], p: float = 0.1) -> np.ndarr
 # ---------------------------------------------------------------------------
 
 _BATCH_MAXLEN = 64
-
-
-def _pad_codes(strs: list[str], maxlen: int) -> tuple[np.ndarray, np.ndarray]:
-    """(codes, lengths): (N, maxlen) int32 codepoints padded with -1."""
-    n = len(strs)
-    lens = np.fromiter((len(s) for s in strs), dtype=np.int64, count=n)
-    codes = np.full((n, max(maxlen, 1)), -1, dtype=np.int32)
-    for i, s in enumerate(strs):
-        if s:
-            codes[i, : len(s)] = np.frombuffer(
-                s.encode("utf-32-le", "surrogatepass"), dtype=np.uint32
-            ).astype(np.int32)
-    return codes, lens
 
 
 def osa_batch(a_strs: list[str], b_strs: list[str]) -> np.ndarray:
@@ -658,6 +518,15 @@ def lcs_batch(a_strs: list[str], b_strs: list[str]) -> np.ndarray:
     return out
 
 
+def _qgram_scalar(a_strs: list[str], b_strs: list[str], q: int
+                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(l1, jaccard, cosine) from the scalar kernels, one pair at a time."""
+    return tuple(
+        np.fromiter((fn(a, b, q) for a, b in zip(a_strs, b_strs)),
+                    dtype=np.float64, count=len(a_strs))
+        for fn in (qgram_dist, qgram_jaccard_dist, qgram_cosine_dist))
+
+
 def qgram_batch(a_strs: list[str], b_strs: list[str], q: int = 1
                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(l1, jaccard, cosine) q-gram distances for N pairs via count-matrix
@@ -668,15 +537,7 @@ def qgram_batch(a_strs: list[str], b_strs: list[str], q: int = 1
         z = np.zeros(0)
         return z, z, z
     if q != 1:  # only the q=1 path is vectorized; mirror scalar otherwise
-        l1 = np.fromiter((qgram_dist(a, b, q) for a, b in zip(a_strs, b_strs)),
-                         dtype=np.float64, count=n)
-        jac = np.fromiter(
-            (qgram_jaccard_dist(a, b, q) for a, b in zip(a_strs, b_strs)),
-            dtype=np.float64, count=n)
-        cos = np.fromiter(
-            (qgram_cosine_dist(a, b, q) for a, b in zip(a_strs, b_strs)),
-            dtype=np.float64, count=n)
-        return l1, jac, cos
+        return _qgram_scalar(a_strs, b_strs, q)
     # flatten all chars of both sides into one code array, remap to a
     # compact alphabet, then histogram per (row, side) with one bincount
     a_lens = np.fromiter((len(s) for s in a_strs), dtype=np.int64, count=n)
@@ -693,15 +554,7 @@ def qgram_batch(a_strs: list[str], b_strs: list[str], q: int = 1
         # dense (n, k) count matrices would be GBs on unicode-heavy
         # batches (e.g. CJK keys) — fall back to the per-pair dict path,
         # O(total chars) memory
-        l1 = np.fromiter((qgram_dist(a, b, 1) for a, b in zip(a_strs, b_strs)),
-                         dtype=np.float64, count=n)
-        jac = np.fromiter(
-            (qgram_jaccard_dist(a, b, 1) for a, b in zip(a_strs, b_strs)),
-            dtype=np.float64, count=n)
-        cos = np.fromiter(
-            (qgram_cosine_dist(a, b, 1) for a, b in zip(a_strs, b_strs)),
-            dtype=np.float64, count=n)
-        return l1, jac, cos
+        return _qgram_scalar(a_strs, b_strs, 1)
     rows_a = np.repeat(np.arange(n), a_lens)
     rows_b = np.repeat(np.arange(n), b_lens)
     na = int(a_lens.sum())
@@ -725,29 +578,21 @@ def qgram_batch(a_strs: list[str], b_strs: list[str], q: int = 1
 
 def jaro_winkler_pairwise(a_strs: list[str], b_strs: list[str],
                           p: float = 0.1) -> np.ndarray:
-    """JW for N (a_i, b_i) pairs: group by the a side and run the
-    bit-parallel ``JaroBatch`` per group (candidate pairs repeat each A
-    against many Bs, so groups are large in the hot path); singleton
-    groups fall back to the scalar kernel."""
-    n = len(a_strs)
-    out = np.empty(n, dtype=np.float64)
-    if n == 0:
-        return out
-    order = np.argsort(np.asarray(a_strs, dtype=object), kind="stable")
-    i = 0
-    while i < n:
-        j = i
-        x = a_strs[order[i]]
-        while j < n and a_strs[order[j]] == x:
-            j += 1
-        grp = order[i:j]
-        if len(grp) >= 3:
-            ys = [b_strs[g] for g in grp]
-            out[grp] = JaroBatch(ys).scores(x, p)
+    """JW for N (a_i, b_i) pairs: group the pairs by their a string and
+    score each group with one ``jaro_winkler_cross([x], ys)`` call
+    (candidate pairs repeat each A against many Bs, so groups are large in
+    the hot path). Groups under 3 pairs use the scalar kernel, which is
+    cheaper there than the cross kernel's per-call setup."""
+    out = np.empty(len(a_strs), dtype=np.float64)
+    groups: dict[str, list[int]] = {}
+    for i, x in enumerate(a_strs):
+        groups.setdefault(x, []).append(i)
+    for x, idx in groups.items():
+        if len(idx) >= 3:
+            out[idx] = jaro_winkler_cross([x], [b_strs[i] for i in idx], p)[0]
         else:
-            for g in grp:
-                out[g] = jaro_winkler(x, b_strs[g], p)
-        i = j
+            for i in idx:
+                out[i] = jaro_winkler(x, b_strs[i], p)
     return out
 
 
@@ -758,8 +603,8 @@ def jaro_winkler_pairwise(a_strs: list[str], b_strs: list[str],
 
 @F.pandas_udf(T.DoubleType())
 def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batch-vectorized JW similarity, lowercased (feature F2): grouped
-    bit-parallel kernel, not a per-row loop."""
+    """Batch-vectorized JW similarity, lowercased (feature F2): the
+    cross kernel per A-group, not a per-row loop."""
     al = a.fillna("").str.lower().tolist()
     bl = b.fillna("").str.lower().tolist()
     return pd.Series(jaro_winkler_pairwise(al, bl), dtype="float64")

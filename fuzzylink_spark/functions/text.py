@@ -1,8 +1,8 @@
 """Text normalization + training-data-pipeline text analysis.
 
 Normalization mirrors the reference's lowercase-before-distance contract
-(reference R/fuzzylink.R:174,180-185) plus the token-normalized blocking
-keys required for the repo-file linkage surface. The analysis functions
+(reference R/fuzzylink.R:174,180-185) plus whitespace collapse for the
+blocking keys of the repo-file linkage surface. The analysis functions
 (language ID, quality score, token counts, fingerprints) are the
 large-scale-pipeline extensions; all are pure Catalyst expressions — no
 Python in the hot path.
@@ -24,14 +24,6 @@ def norm_key(col: Column | str) -> Column:
     for token-normalized blocking per the target input shape)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
-
-
-def token_norm_key(col: Column | str) -> Column:
-    """Token-normalized key: lowercase, strip punctuation, sort-stable
-    single-space join. Used for blocking keys over free-form names."""
-    c = F.col(col) if isinstance(col, str) else col
-    cleaned = F.regexp_replace(F.lower(c), r"[^\p{L}\p{N}\s]", " ")
-    return F.trim(F.regexp_replace(cleaned, r"\s+", " "))
 
 
 def initcap_first_word(col: Column | str) -> Column:

@@ -574,15 +574,6 @@ def fit_mixture2d_em(
     return best
 
 
-def fit_mixture2d_on_pairs(pairs: DataFrame, fx: str = "sim", fy: str = "jw",
-                           bins: int = 200, k: int = 3,
-                           prevalence_hint: float | None = None) -> Mixture2D:
-    hist = score_histogram_2d(pairs, fx, fy, bins=bins)
-    model = fit_mixture2d_em(hist, k=k, prevalence_hint=prevalence_hint)
-    model.features = (fx, fy)
-    return model
-
-
 # ---------------------------------------------------------------------------
 # shared scoring entry
 # ---------------------------------------------------------------------------

@@ -1,25 +1,26 @@
-"""Round-6 optimization pins: every rewritten kernel must stay
-bit-identical to the implementation it replaced."""
+"""Jaro-Winkler cross kernel pins: the native C path and the numpy 2-D
+path must both be bit-identical to the scalar ``jaro_winkler``, and the
+native kernel must only load from a private cache dir."""
 
 import random
 import string
 
 import numpy as np
 
-from fuzzylink_spark.functions.strdist import JaroBatch, jaro_winkler, jaro_winkler_cross
+from fuzzylink_spark.functions.strdist import jaro_winkler, jaro_winkler_cross
 
 
-def _row_batched_cross(xs, ys, p=0.1):
-    """The pre-round-6 jaro_winkler_cross: JaroBatch row at a time (the
-    kernel the 2-D vectorized path must reproduce bit-for-bit)."""
-    batch = JaroBatch(ys)
+def _scalar_cross(xs, ys, p=0.1):
+    """The scalar reference kernel over every (x, y) cell: the matrix both
+    cross-kernel paths must reproduce bit-for-bit."""
     out = np.empty((len(xs), len(ys)), dtype=np.float64)
     for i, x in enumerate(xs):
-        out[i] = batch.scores(x, p)
+        for j, y in enumerate(ys):
+            out[i, j] = jaro_winkler(x, y, p)
     return out
 
 
-def test_jw_cross_2d_matches_row_batched_kernel():
+def test_jw_cross_2d_matches_scalar_kernel():
     rng = random.Random(7)
     words = ("key agg row scan slow fast table value part hash batch "
              "window spark order data column").split()
@@ -27,7 +28,7 @@ def test_jw_cross_2d_matches_row_batched_kernel():
           for _ in range(120)]
     ys = [" ".join(rng.choice(words) for _ in range(rng.randint(1, 8)))[:48]
           for _ in range(150)]
-    assert np.array_equal(jaro_winkler_cross(xs, ys), _row_batched_cross(xs, ys))
+    assert np.array_equal(jaro_winkler_cross(xs, ys), _scalar_cross(xs, ys))
 
 
 def test_jw_cross_2d_edge_cases():
@@ -35,7 +36,7 @@ def test_jw_cross_2d_edge_cases():
             "日本語のテキスト", "ZZZ",
             "spark" * 13, "x" * 64, "y" * 65, "same same"]
     assert np.array_equal(jaro_winkler_cross(edge, edge),
-                          _row_batched_cross(edge, edge))
+                          _scalar_cross(edge, edge))
 
 
 def test_jw_cross_2d_fuzz_unicode():
@@ -44,18 +45,22 @@ def test_jw_cross_2d_fuzz_unicode():
     strs = ["".join(rng.choice(alpha) for _ in range(rng.randint(0, 70)))
             for _ in range(160)]
     xs, ys = strs[:80], strs[80:]
-    assert np.array_equal(jaro_winkler_cross(xs, ys), _row_batched_cross(xs, ys))
+    assert np.array_equal(jaro_winkler_cross(xs, ys), _scalar_cross(xs, ys))
 
 
 def test_jw_cross_2d_chunk_boundaries(monkeypatch):
+    import fuzzylink_spark.functions._jw_native as njw
     import fuzzylink_spark.functions.strdist as sd
 
+    # only the numpy path chunks x rows
+    monkeypatch.setattr(njw, "_FN", None)
+    monkeypatch.setattr(njw, "_TRIED", True)
     rng = random.Random(3)
     xs = ["".join(rng.choice(string.ascii_lowercase) for _ in range(10))
           for _ in range(37)]
     ys = ["".join(rng.choice(string.ascii_lowercase) for _ in range(10))
           for _ in range(41)]
-    want = _row_batched_cross(xs, ys)
+    want = _scalar_cross(xs, ys)
     for chunk in (1, 7, 100, 1 << 16):
         monkeypatch.setattr(sd, "_JW_CHUNK_PAIRS", chunk)
         assert np.array_equal(jaro_winkler_cross(xs, ys), want)
@@ -69,7 +74,7 @@ def test_jw_cross_all_degenerate_y_sides(monkeypatch):
 
     xs = ["abc", "a b c", "z" * 64]
     for ys in (["", ""], ["x" * 70, "y" * 100], ["", "x" * 70]):
-        want = _row_batched_cross(xs, ys)
+        want = _scalar_cross(xs, ys)
         assert np.array_equal(jaro_winkler_cross(xs, ys), want)
         monkeypatch.setattr(njw, "_FN", None)
         monkeypatch.setattr(njw, "_TRIED", True)
@@ -79,7 +84,7 @@ def test_jw_cross_all_degenerate_y_sides(monkeypatch):
 
 def test_jw_cross_native_and_numpy_paths_agree(monkeypatch):
     """The C kernel (when a compiler exists) and the numpy 2-D kernel must
-    produce identical bits; both must match the row-batched reference."""
+    produce identical bits; both must match the scalar reference."""
     import fuzzylink_spark.functions._jw_native as njw
 
     rng = random.Random(13)
@@ -88,7 +93,7 @@ def test_jw_cross_native_and_numpy_paths_agree(monkeypatch):
           for _ in range(60)]
     ys = ["".join(rng.choice(alpha) for _ in range(rng.randint(0, 70)))
           for _ in range(70)]
-    want = _row_batched_cross(xs, ys)
+    want = _scalar_cross(xs, ys)
     got_default = jaro_winkler_cross(xs, ys)
     assert np.array_equal(got_default, want)
     # force the numpy fallback path regardless of compiler availability
@@ -137,39 +142,8 @@ def test_jw_native_default_cache_dir_is_private(tmp_path, monkeypatch):
     assert stat.S_IMODE(os.stat(d).st_mode) == 0o700
 
 
-def test_p4_removal_driver_and_distributed_paths_agree(spark, monkeypatch):
-    """The driver-computed P4 removal list and the distributed fallback
-    (caps forced to the degenerate branch) must produce the same pair
-    table on an input with multi-block keys."""
-    import fuzzylink_spark.pipeline as pl
-    from fuzzylink_spark.config import LinkConfig
-    from fuzzylink_spark.pipeline import build_scored_pairs
-
-    rows_a = [(f"key {i % 7}", f"blk{i % 3}") for i in range(40)]
-    rows_b = [(f"key {(i + 1) % 7}", f"blk{i % 3}") for i in range(40)]
-    dfa = spark.createDataFrame(rows_a, "name string, grp string")
-    dfb = spark.createDataFrame(rows_b, "name string, grp string")
-    cfg = LinkConfig(by="name", blocking_keys=["grp"], embedding_dim=16,
-                     blocks_are_small=True)
-
-    def run():
-        sp = build_scored_pairs(spark, dfa, dfb, cfg, attach_strings=False)
-        out = sorted(
-            (r["block_id"], r["a_id"], r["b_id"], r["sim"], r["jw"])
-            for r in sp.df.collect()
-        )
-        sp.release_intermediates()
-        return out
-
-    fast = run()
-    monkeypatch.setattr(pl, "_OCC_COLLECT_CAP", 0)
-    slow = run()
-    assert fast == slow
-    assert len(fast) == len({(b, a, c) for b, a, c, *_ in fast})  # deduped
-
-
 def test_jw_cross_2d_scalar_parity_spot():
-    # anchor to the scalar reference kernel too, not just the row-batched one
+    # cell-by-cell against the scalar kernel on short keys with empties
     rng = random.Random(5)
     xs = ["".join(rng.choice(string.ascii_lowercase + " ")
                   for _ in range(rng.randint(0, 20))) for _ in range(25)]

@@ -107,3 +107,34 @@ def test_repo_files_sha256_invariant(spark):
     out = add_block_key(files, ["lang"])
     after = out.select("file_id", content_sha256("content").alias("h"))
     assert before.exceptAll(after).count() == 0
+
+
+def test_p4_removal_driver_and_distributed_paths_agree(spark, monkeypatch):
+    """The driver-computed P4 removal list and the distributed fallback
+    (caps forced to the degenerate branch) must produce the same pair
+    table on an input with multi-block keys."""
+    import fuzzylink_spark.pipeline as pl
+    from fuzzylink_spark.config import LinkConfig
+    from fuzzylink_spark.pipeline import build_scored_pairs
+
+    rows_a = [(f"key {i % 7}", f"blk{i % 3}") for i in range(40)]
+    rows_b = [(f"key {(i + 1) % 7}", f"blk{i % 3}") for i in range(40)]
+    dfa = spark.createDataFrame(rows_a, "name string, grp string")
+    dfb = spark.createDataFrame(rows_b, "name string, grp string")
+    cfg = LinkConfig(by="name", blocking_keys=["grp"], embedding_dim=16,
+                     blocks_are_small=True)
+
+    def run():
+        sp = build_scored_pairs(spark, dfa, dfb, cfg, attach_strings=False)
+        out = sorted(
+            (r["block_id"], r["a_id"], r["b_id"], r["sim"], r["jw"])
+            for r in sp.df.collect()
+        )
+        sp.release_intermediates()
+        return out
+
+    fast = run()
+    monkeypatch.setattr(pl, "_OCC_COLLECT_CAP", 0)
+    slow = run()
+    assert fast == slow
+    assert len(fast) == len({(b, a, c) for b, a, c, *_ in fast})  # deduped

@@ -8,9 +8,10 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+import fuzzylink_spark.functions._jw_native as njw
 from fuzzylink_spark.functions.strdist import (
-    JaroBatch,
     jaro_winkler,
+    jaro_winkler_cross,
     lcs_distance,
     osa_distance,
     qgram_jaccard_dist,
@@ -27,11 +28,20 @@ _short = st.text(min_size=0, max_size=24)
 
 @settings(max_examples=200, deadline=None)
 @given(x=_text, ys=st.lists(_text, min_size=1, max_size=8))
-def test_jaro_batch_matches_scalar(x, ys):
-    batch = JaroBatch(ys)
-    got = batch.scores(x)
+def test_jw_cross_row_matches_scalar(x, ys):
+    # exact on both kernel paths: native (when it builds) and forced numpy;
+    # the loader state is swapped here because hypothesis rejects
+    # function-scoped fixtures such as monkeypatch. Copies of ys behind a
+    # 6-char prefix of x reach the 4-char cap on the prefix bonus.
+    ys = ys + [x[:6] + y for y in ys]
     want = np.array([jaro_winkler(x, y) for y in ys])
-    assert np.allclose(got, want, atol=1e-12), (x, ys)
+    assert np.array_equal(jaro_winkler_cross([x], ys)[0], want), (x, ys)
+    saved = njw._FN, njw._TRIED
+    njw._FN, njw._TRIED = None, True
+    try:
+        assert np.array_equal(jaro_winkler_cross([x], ys)[0], want), (x, ys)
+    finally:
+        njw._FN, njw._TRIED = saved
 
 
 @settings(max_examples=200, deadline=None)

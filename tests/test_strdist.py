@@ -108,6 +108,9 @@ def test_batch_kernels_match_scalar():
         pairs.append((a, b))
     pairs.append(("x" * 70, "x" * 69 + "y"))  # scalar-fallback path
     pairs.append(("ab\ud800cd", "abcd"))  # lone surrogate (surrogatepass)
+    # one A repeated against many Bs: the grouped cross-kernel route
+    pairs += [("grouped key", b) for b in
+              ("", "grouped key", "g" * 70, "grouped\ud800key", "key grouped")]
     al = [p[0] for p in pairs]
     bl = [p[1] for p in pairs]
     l1, jac, cos = qgram_batch(al, bl)
